@@ -13,7 +13,6 @@ embarrassingly parallel (keyed by url, no shuffle).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,8 +40,3 @@ def extract_udf(html: pd.Series) -> pd.DataFrame:
         }
     )
 
-
-def with_extraction(html_col: str | Column = "html") -> Column:
-    """Column expression producing the extraction struct."""
-    col = F.col(html_col) if isinstance(html_col, str) else html_col
-    return extract_udf(col)

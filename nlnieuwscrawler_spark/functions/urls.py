@@ -28,7 +28,6 @@ __all__ = [
     "url_host",
     "url_path",
     "url_fingerprint",
-    "host_hash",
 ]
 
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
@@ -198,11 +197,6 @@ def url_fingerprint(url: Column) -> Column:
     h1 = F.hash(url).cast("long")
     h2 = F.hash(F.concat(F.lit(spec.FP_SALT), url)).cast("long")
     return F.shiftleft(h1, 32).bitwiseOR(h2.bitwiseAND(F.lit(4294967295)))
-
-
-def host_hash(host: Column) -> Column:
-    """32-bit Murmur3 host hash used for bucketing/salting (O10)."""
-    return F.hash(host)
 
 
 # C4/FineWeb-style URL-level gating: blocklist tokens matched as EXACT

@@ -18,6 +18,8 @@ All emit deterministic results (fixed seeds, total-order tie-breaks).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -102,42 +104,24 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # n-gram Jaccard near-dup (pairwise within blocking key)
 # --------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(
+def _df_ordered_grams(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_col: str | None = "lang",
-    n: int = 3,
-    threshold: float = 0.5,
-    spread: bool = True,
-) -> DataFrame:
-    """All (a < b) pairs with n-gram Jaccard ≥ threshold, within a block.
+    text_col: str,
+    id_col: str,
+    block_col: str | None,
+    n: int,
+    threshold: float,
+    spread: bool,
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The prefix-filtering gram table shared by the exact pair generators.
 
-    Docs whose ``block_col`` value is NULL are EXCLUDED from all pairing
-    (the candidate equi-join on the block key drops NULL keys) —
-    consistent with ``minhash_lsh_pairs``; coalesce a nullable block
-    column to a sentinel first if NULL-block docs should still pair
-    among themselves (ADVICE r6).
-
-    EXACT set-similarity self-join via PREFIX FILTERING (the PPJoin-family
-    bound): order each doc's distinct shingle set by ONE global total
-    order; if J(a,b) ≥ τ the two sets MUST share a token within each one's
-    first ``|s| - ceil(τ·|s|) + 1`` elements. So candidates come from an
-    EQUI-join on exploded prefix tokens — O(Σ per-token pairings), never
-    the O(block²) all-pairs join — and only candidates pay the
-    array_intersect verify. The order is ASCENDING DOCUMENT FREQUENCY
-    (then token), the PPJoin essential: prefixes then hold each doc's
-    RAREST shingles, so hot tokens (boilerplate shared by thousands of
-    docs) stay out of the candidate join — with a plain hash order one
-    common trigram re-creates the quadratic bucket this exists to avoid.
-    Same results as the naive form (the DuckDB oracle stays the naive
-    SQL), but the plan survives a 100× scale-up: shuffles are keyed by
-    token / id, all linear in input ± candidates. Requires threshold > 0
-    (empty-gram docs can then never match and are dropped up front).
-    Output: doc_a, doc_b, jacc.
+    Returns ``(ex, g, prefix_len)``: ``ex`` is the persisted
+    ``(id, blk, tok)`` explode of each doc's distinct hashed shingles;
+    ``g`` is the persisted ``(id, blk, grams)`` table with each doc's
+    grams sorted by ascending document frequency, then token; and
+    ``prefix_len`` is the ``|s| - ceil(τ·|s|) + 1`` prefix length over
+    ``grams``. The caller releases both caches.
     """
-    if threshold <= 0:
-        raise ValueError("prefix filtering requires threshold > 0")
     # hash shingles to longs BEFORE the pairwise stage: array_intersect on
     # int64 is ~20× cheaper than on strings across O(pairs) evaluations;
     # Jaccard over hashed distinct sets equals Jaccard over the strings
@@ -184,6 +168,91 @@ def ngram_jaccard_pairs(
         - F.ceil(F.lit(threshold) * F.size("grams")).cast("int")
         + F.lit(1)
     )
+    return ex, g, prefix_len
+
+
+def _verify_pairs(
+    cand: DataFrame,
+    g: DataFrame,
+    score: Callable[[Column, Column], Column],
+    names: tuple[str, str, str],
+    threshold: float,
+    release: tuple[DataFrame, ...],
+    eager: bool = True,
+) -> DataFrame:
+    """Exact-verify candidate ``(doc_a, doc_b)`` pairs against ``g``'s
+    ``(id, grams)`` sets: ``score(ga, gb)`` rounded to 6 dp, kept if
+    ``≥ threshold``, output as the three ``names``.
+
+    The threshold applies to the ROUNDED score, the oracle convention (a
+    6-dp boundary case must fall the same way in both engines). Eager by
+    default: the verified pair set is tiny (linear in near-dups), so it is
+    materialized here and the ``release`` caches unpersisted — a lazily
+    returned plan would pin them in the cache manager for the life of the
+    session (cached DFs are never GC-cleaned), leaking executor memory
+    across a long bench/crawl session. ``eager=False`` returns the lazy
+    plan and leaves the caches to the caller.
+    """
+    ga = g.select(F.col("id").alias("doc_a"), F.col("grams").alias("ga"))
+    gb = g.select(F.col("id").alias("doc_b"), F.col("grams").alias("gb"))
+    a, b, s = names
+    out = (
+        cand.join(ga, "doc_a")
+        .join(gb, "doc_b")
+        .select(
+            F.col("doc_a").alias(a),
+            F.col("doc_b").alias(b),
+            F.round(score(F.col("ga"), F.col("gb")), 6).alias(s),
+        )
+        .filter(F.col(s) >= threshold)
+    )
+    if not eager:
+        return out
+    out = out.localCheckpoint(eager=True)
+    for c in release:
+        c.unpersist()
+    return out
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    block_col: str | None = "lang",
+    n: int = 3,
+    threshold: float = 0.5,
+    spread: bool = True,
+) -> DataFrame:
+    """All (a < b) pairs with n-gram Jaccard ≥ threshold, within a block.
+
+    Docs whose ``block_col`` value is NULL are EXCLUDED from all pairing
+    (the candidate equi-join on the block key drops NULL keys) —
+    consistent with ``minhash_lsh_pairs``; coalesce a nullable block
+    column to a sentinel first if NULL-block docs should still pair
+    among themselves (ADVICE r6).
+
+    EXACT set-similarity self-join via PREFIX FILTERING (the PPJoin-family
+    bound): order each doc's distinct shingle set by ONE global total
+    order; if J(a,b) ≥ τ the two sets MUST share a token within each one's
+    first ``|s| - ceil(τ·|s|) + 1`` elements. So candidates come from an
+    EQUI-join on exploded prefix tokens — O(Σ per-token pairings), never
+    the O(block²) all-pairs join — and only candidates pay the
+    array_intersect verify. The order is ASCENDING DOCUMENT FREQUENCY
+    (then token), the PPJoin essential: prefixes then hold each doc's
+    RAREST shingles, so hot tokens (boilerplate shared by thousands of
+    docs) stay out of the candidate join — with a plain hash order one
+    common trigram re-creates the quadratic bucket this exists to avoid.
+    Same results as the naive form (the DuckDB oracle stays the naive
+    SQL), but the plan survives a 100× scale-up: shuffles are keyed by
+    token / id, all linear in input ± candidates. Requires threshold > 0
+    (empty-gram docs can then never match and are dropped up front).
+    Output: doc_a, doc_b, jacc.
+    """
+    if threshold <= 0:
+        raise ValueError("prefix filtering requires threshold > 0")
+    ex, g, prefix_len = _df_ordered_grams(
+        df, text_col, id_col, block_col, n, threshold, spread
+    )
     pref = g.select(
         "id", "blk", F.size("grams").alias("sz"),
         F.explode(F.slice(F.col("grams"), F.lit(1), prefix_len)).alias("tok"),
@@ -205,27 +274,9 @@ def ngram_jaccard_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    ga = g.select(F.col("id").alias("doc_a"), F.col("grams").alias("ga"))
-    gb = g.select(F.col("id").alias("doc_b"), F.col("grams").alias("gb"))
-    out = (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jaccard(F.col("ga"), F.col("gb")), 6).alias("jacc"),
-        )
-        .filter(F.col("jacc") >= threshold)
-        # materialize eagerly (the verified pair set is tiny — linear in
-        # near-dups) so the persisted gram table can be released HERE: a
-        # lazily-returned plan would pin ``g`` in the cache manager for the
-        # life of the session (cached DFs are never GC-cleaned), leaking
-        # executor memory across a long bench/crawl session.
-        .localCheckpoint(eager=True)
+    return _verify_pairs(
+        cand, g, jaccard, ("doc_a", "doc_b", "jacc"), threshold, (g, ex)
     )
-    g.unpersist()
-    ex.unpersist()
-    return out
 
 
 def containment_pairs(
@@ -262,36 +313,8 @@ def containment_pairs(
     """
     if threshold <= 0:
         raise ValueError("prefix filtering requires threshold > 0")
-    ex = _spread(
-        df.select(
-            F.col(id_col).alias("id"),
-            (F.col(block_col) if block_col else F.lit("all")).alias("blk"),
-            F.col(text_col),
-        )
-    ).select(
-        "id",
-        "blk",
-        F.explode(
-            F.array_distinct(
-                F.transform(word_ngrams(F.col(text_col), n), lambda s: F.xxhash64(s))
-            )
-        ).alias("tok"),
-    ).persist()
-    freq = ex.groupBy("tok").agg(F.count("*").alias("freq"))
-    g = (
-        ex.join(freq, "tok")
-        .groupBy("id", "blk")
-        .agg(F.array_sort(F.collect_list(F.struct("freq", "tok"))).alias("__o"))
-        .select(
-            "id", "blk",
-            F.transform("__o", lambda s: s["tok"]).alias("grams"),
-        )
-        .persist()
-    )
-    prefix_len = (
-        F.size("grams")
-        - F.ceil(F.lit(threshold) * F.size("grams")).cast("int")
-        + F.lit(1)
+    ex, g, prefix_len = _df_ordered_grams(
+        df, text_col, id_col, block_col, n, threshold, True
     )
     contained = g.select(
         F.col("id").alias("doc_b"), "blk", F.size("grams").alias("sz_b"),
@@ -308,34 +331,16 @@ def containment_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    ga = g.select(F.col("id").alias("doc_a"), F.col("grams").alias("ga"))
-    gb = g.select(F.col("id").alias("doc_b"), F.col("grams").alias("gb"))
-    score = (
-        F.size(F.array_intersect(F.col("ga"), F.col("gb"))).cast("double")
-        / F.size("gb")
+
+    def containment(ga: Column, gb: Column) -> Column:
+        return F.size(F.array_intersect(ga, gb)).cast("double") / F.size(gb)
+
+    # ``eager=False``: lazy form for plan inspection (tests) — the caller
+    # owns the caches' lifetime; the default eager path is the production one
+    return _verify_pairs(
+        cand, g, containment, ("container", "contained", "containment"),
+        threshold, (g, ex), eager,
     )
-    out = (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select(
-            F.col("doc_a").alias("container"),
-            F.col("doc_b").alias("contained"),
-            F.round(score, 6).alias("containment"),
-        )
-        # threshold on the ROUNDED score, the ngram_jaccard_pairs / oracle
-        # convention (a 6-dp boundary case must fall the same way in both
-        # engines)
-        .filter(F.col("containment") >= threshold)
-    )
-    if not eager:
-        # lazy form for plan inspection (tests) — caller owns the caches'
-        # lifetime; the default eager path below is the production one
-        return out
-    # eager for the same cache-lifecycle reason as ngram_jaccard_pairs
-    out = out.localCheckpoint(eager=True)
-    g.unpersist()
-    ex.unpersist()
-    return out
 
 
 def dedup_retention(
@@ -699,7 +704,7 @@ def minhash_lsh_pairs(
     gram_cols = ["id", word_ngrams(F.col(text_col), n).alias("grams")] + blk
     src = df.select(*base)
     if spread:
-        # see ngram_jaccard_pairs: skip the df.rdd partition probe when
+        # see _df_ordered_grams: skip the df.rdd partition probe when
         # the caller knows the input is already well-partitioned
         src = _spread(src)
     g = (
@@ -773,25 +778,9 @@ def minhash_lsh_pairs(
         .select(F.col("x.id").alias("doc_a"), F.col("y.id").alias("doc_b"))
         .distinct()
     )
-    ga = g.select(F.col("id").alias("doc_a"), F.col("grams").alias("ga"))
-    gb = g.select(F.col("id").alias("doc_b"), F.col("grams").alias("gb"))
-    verified = (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jaccard(F.col("ga"), F.col("gb")), 6).alias("jacc"),
-        )
-        .filter(F.col("jacc") >= threshold)
-        # materialize eagerly so the signature cache can be released here
-        # (same lifecycle as ngram_jaccard_pairs: the verified pair set is
-        # tiny — linear in true near-dups)
-        .localCheckpoint(eager=True)
+    return _verify_pairs(
+        cand, g, jaccard, ("doc_a", "doc_b", "jacc"), threshold, (g, sig)
     )
-    g.unpersist()
-    sig.unpersist()
-    return verified
 
 
 # --------------------------------------------------------------------------

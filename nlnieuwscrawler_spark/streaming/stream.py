@@ -3,11 +3,6 @@
 The crawl's epoch loop IS a micro-batch pipeline, so the streaming mapping
 is direct:
 
-- ``stream_pages(...)`` — a rate-limited readStream over a pages directory
-  (``maxFilesPerTrigger``), the streaming stand-in for a live fetch feed
-- ``windowed_fetch_metrics`` — watermarked tumbling/sliding aggregation
-  (per-hour fetch metrics; late pages beyond the watermark are dropped,
-  exactly the semantics the batch date_trunc oracle checks)
 - ``streaming_dedup`` — ``dropDuplicatesWithinWatermark`` on url_fp: the
   streaming URL-seen set (state-store-backed, watermark-bounded memory)
 - ``stateful_host_budget`` — ``applyInPandasWithState``: a per-host frontier
@@ -16,8 +11,8 @@ is direct:
 - ``run_epoch_stream`` — foreachBatch driver running the batch epoch plan
   per micro-batch with exactly-once snapshot commits (Trigger.AvailableNow)
 
-All tested against their batch twins in tests/test_streaming.py via the
-memory sink + ``processAllAvailable`` (the public local-smoke pattern).
+All tested against their batch twins in tests/test_streaming_media.py via
+the memory sink + ``processAllAvailable`` (the public local-smoke pattern).
 """
 
 from __future__ import annotations
@@ -29,42 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from nlnieuwscrawler_spark import spec
-
-
-def stream_events(spark: SparkSession, path: str, schema, max_files: int = 1) -> DataFrame:
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(path)
-    )
-
-
-def windowed_fetch_metrics(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_width: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling (or sliding) counts — the O18 metrics stream."""
-    win = (
-        F.window(F.col(ts_col), window_width, slide)
-        if slide
-        else F.window(F.col(ts_col), window_width)
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("w"), F.col(key_col))
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            key_col,
-            "n",
-        )
-    )
 
 
 def streaming_dedup(

@@ -1,17 +1,20 @@
 """Session warm-up contract.
 
-The r7 warm-up moves one-time engine init (first shuffle, Python worker
-pool, parquet reader/writer, Python DataSource machinery) to session
-construction so it stops landing on whichever registry query runs first.
-The warm-up is best-effort (broad except), which makes silent truncation
-its failure mode: an exception mid-way skips the remaining warms AND the
-completion marker without failing anything (exactly what happened when
-``@F.pandas_udf`` could not resolve its ``pd.Series`` string annotations
-from module globals — caught in r7). These tests pin the observable
-contract so that regression class cannot ship green again.
+The warm-up moves one-time engine init (first shuffle and broadcast, the
+Arrow/Python worker path, the persist and parquet paths) to session
+construction so it stops landing on whichever crawl epoch or curate run
+comes first. It must never truncate in silence: a step that raises fails
+session construction, and the completion marker is set only after every
+step ran.
 """
 
 from __future__ import annotations
+
+from types import SimpleNamespace
+
+import pytest
+
+from nlnieuwscrawler_spark.session import _warm_up
 
 
 def test_warm_up_ran_to_completion(spark):
@@ -20,9 +23,14 @@ def test_warm_up_ran_to_completion(spark):
     assert spark.conf.get("spark.nlnc.warmed", None) == "1"
 
 
-def test_warm_up_registered_python_datasource(spark):
-    # the dummy Python source both warms the plan-time worker machinery
-    # and stays registered; reading it is sub-second on a warmed session
-    df = spark.read.format("nlnc_warm_src").load()
-    assert df.count() == 1
-    assert df.columns == ["i"]
+def test_warm_up_step_failure_raises():
+    # a session not yet warmed whose first warm step fails: the failure
+    # must surface, not cut the warm-up short in silence
+    def fail(*args, **kwargs):
+        raise RuntimeError("warm step failed")
+
+    stub = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key, default=None: None), range=fail
+    )
+    with pytest.raises(RuntimeError, match="warm step failed"):
+        _warm_up(stub)
