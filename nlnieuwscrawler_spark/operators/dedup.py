@@ -178,20 +178,18 @@ def _verify_pairs(
     names: tuple[str, str, str],
     threshold: float,
     release: tuple[DataFrame, ...],
-    eager: bool = True,
 ) -> DataFrame:
     """Exact-verify candidate ``(doc_a, doc_b)`` pairs against ``g``'s
     ``(id, grams)`` sets: ``score(ga, gb)`` rounded to 6 dp, kept if
     ``≥ threshold``, output as the three ``names``.
 
     The threshold applies to the ROUNDED score, the oracle convention (a
-    6-dp boundary case must fall the same way in both engines). Eager by
-    default: the verified pair set is tiny (linear in near-dups), so it is
+    6-dp boundary case must fall the same way in both engines). Eager:
+    the verified pair set is tiny (linear in near-dups), so it is
     materialized here and the ``release`` caches unpersisted — a lazily
     returned plan would pin them in the cache manager for the life of the
     session (cached DFs are never GC-cleaned), leaking executor memory
-    across a long bench/crawl session. ``eager=False`` returns the lazy
-    plan and leaves the caches to the caller.
+    across a long bench/crawl session.
     """
     ga = g.select(F.col("id").alias("doc_a"), F.col("grams").alias("ga"))
     gb = g.select(F.col("id").alias("doc_b"), F.col("grams").alias("gb"))
@@ -205,10 +203,7 @@ def _verify_pairs(
             F.round(score(F.col("ga"), F.col("gb")), 6).alias(s),
         )
         .filter(F.col(s) >= threshold)
-    )
-    if not eager:
-        return out
-    out = out.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     for c in release:
         c.unpersist()
     return out
@@ -286,7 +281,6 @@ def containment_pairs(
     block_col: str | None = "lang",
     n: int = 3,
     threshold: float = 0.8,
-    eager: bool = True,
 ) -> DataFrame:
     """All ORDERED (container, contained) pairs with n-gram containment
     ``|grams(contained) ∩ grams(container)| / |grams(contained)| ≥ τ``,
@@ -335,11 +329,9 @@ def containment_pairs(
     def containment(ga: Column, gb: Column) -> Column:
         return F.size(F.array_intersect(ga, gb)).cast("double") / F.size(gb)
 
-    # ``eager=False``: lazy form for plan inspection (tests) — the caller
-    # owns the caches' lifetime; the default eager path is the production one
     return _verify_pairs(
         cand, g, containment, ("container", "contained", "containment"),
-        threshold, (g, ex), eager,
+        threshold, (g, ex),
     )
 
 
@@ -536,11 +528,9 @@ def dedup_components(
     Convergence detected by an exact decimal sum of labels (labels only
     ever decrease, so equal sum ⟺ fixpoint).
 
-    ``stats``: pass a dict to receive ``{"rounds": n, "round_secs":
-    [...]}`` — the scale bench reports the iteration profile with it.
+    ``stats``: pass a dict to receive ``{"rounds": n}``, the number of
+    label-propagation rounds run — the scale bench reports it.
     """
-    import time as _time
-
     from nlnieuwscrawler_spark.operators.checkpoint import cut_lineage
 
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -556,9 +546,8 @@ def dedup_components(
         reliable,
     )
     prev_sum = None
-    round_secs: list[float] = []
-    for _ in range(max_iter):
-        t_round = _time.perf_counter()
+    rounds = 0
+    for rounds in range(1, max_iter + 1):
         nmin = (
             edges.join(
                 lab.select(F.col("id").alias("dst"), F.col("label").alias("dlab")),
@@ -588,13 +577,11 @@ def dedup_components(
         cur = lab.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
-        round_secs.append(round(_time.perf_counter() - t_round, 3))
         if cur == prev_sum:
             break
         prev_sum = cur
     if stats is not None:
-        stats["rounds"] = len(round_secs)
-        stats["round_secs"] = round_secs
+        stats["rounds"] = rounds
     return lab.select(F.col("id").alias("doc_id"), F.col("label").alias("component"))
 
 

@@ -17,8 +17,6 @@ a DuckDB oracle that unrolls the same K iterations reproduces every bit.
 
 from __future__ import annotations
 
-import time as _time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -110,17 +108,13 @@ def host_pagerank(
         nodes.select("host", init_col.alias("rank")), reliable, eager=False
     )
 
-    round_secs: list[float] = []
     for _ in range(iters):
-        t0 = _time.perf_counter()
         new = _pagerank_step(
             e, outd, nodes, ranks, n_nodes, damping, broadcast_ranks, seeds
         )
         ranks = cut_lineage(new, reliable, eager=False)
-        round_secs.append(round(_time.perf_counter() - t0, 3))
     if stats is not None:
-        stats["rounds"] = len(round_secs)
-        stats["round_secs"] = round_secs
+        stats["rounds"] = iters
     return ranks
 
 
@@ -269,9 +263,9 @@ def crawl_depth(
         eager=False,
     )
     frontier = dist.filter(F.col("depth") == 0).select("host")
-    round_secs: list[float] = []
+    rounds = 0
     for r in range(1, max_depth + 1):
-        t0 = _time.perf_counter()
+        rounds = r
         fr = F.broadcast(frontier) if broadcast_frontier else frontier
         reached = (
             e.join(fr, e["src"] == fr["host"])
@@ -286,13 +280,10 @@ def crawl_depth(
         )
         dist = cut_lineage(nxt, reliable, eager=False)
         frontier = dist.filter(F.col("depth") == r).select("host")
-        n_front = frontier.count()
-        round_secs.append(round(_time.perf_counter() - t0, 3))
-        if n_front == 0:
+        if frontier.count() == 0:
             break
     if stats is not None:
-        stats["rounds"] = len(round_secs)
-        stats["round_secs"] = round_secs
+        stats["rounds"] = rounds
     return dist
 
 

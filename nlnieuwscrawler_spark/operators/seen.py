@@ -27,21 +27,25 @@ filter's state of record is a **DataFrame of partition rows**
 (``partition_id, bloom, n_items, n_bits, n_hashes``), partitioned by
 ``pmod(url_fp, P)``; the full bitmap is NEVER assembled on the driver:
 
-- **build**: ``applyInPandas`` per partition ORs that partition's
-  fingerprints into its own slice (numpy);
-- **merge** (per-epoch): ``unionByName`` old+delta rows, ``groupBy
-  partition_id``, OR-reduce inside ``applyInPandas`` — executor-side;
+- **update** (per epoch, one pass for either kind): the batch's keys are
+  co-shuffled with their ``pmod(fp, P)`` slice in one ``cogroup`` and
+  applied inside that task — the Bloom ORs their bit positions in, the
+  cuckoo inserts (or deletes) their tags; a slice that gets no keys passes
+  through unchanged, a partition first touched now starts from zeros;
 - **probe**: candidates co-shuffled to their ``pmod(fp, P)`` slice via a
   ``cogroup``-``applyInPandas``, probed against only that slice (at
   P = 16384 a 15 GB filter is ~0.9 MB per task). Small filters
-  (≤ ``broadcast_max_bytes`` total, default 32 MiB) instead take a
-  broadcast fast path that skips the candidate shuffle — same result,
-  chosen by size exactly like a broadcast-vs-shuffled hash join.
+  (≤ ``BROADCAST_MAX_BYTES`` total, 32 MiB) instead take a broadcast fast
+  path that skips the candidate shuffle — same result, chosen by size
+  exactly like a broadcast-vs-shuffled hash join.
 
-:class:`CuckooSeenSet` is the deletable variant (frontier retractions):
-same partition-row state and probe machinery, 4-way bucketed cuckoo
-hashing with 12-bit tags (fpp ≈ 2·4/2^12 ≈ 0.2%), supporting
-``remove_keys`` — a Bloom cannot unset bits.
+Both kinds share that skeleton (:class:`SeenSet`) and differ only in a
+slice codec: module-level numpy functions that decode a row's blob into a
+slice, look fps up in a stack of slices, and insert fps into one slice.
+:class:`CuckooSeenSet` is the deletable kind (frontier retractions):
+4-way bucketed cuckoo hashing with 12-bit tags (fpp ≈ 2·4/2^12 ≈ 0.2%),
+adding a delete to its codec for ``remove_keys`` — a Bloom cannot unset
+bits.
 
 Closure hygiene: every function shipped to executors captures only plain
 ints / numpy arrays (never ``self`` — it holds the SparkSession, SPARK-5063).
@@ -50,6 +54,7 @@ ints / numpy arrays (never ``self`` — it holds the SparkSession, SPARK-5063).
 from __future__ import annotations
 
 import math
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -81,16 +86,16 @@ def _pid(fp_col, n_partitions: int):
     return F.pmod(F.col(fp_col), F.lit(n_partitions)).cast("int")
 
 
-class BloomSeenSet:
-    """Partitioned Bloom seen-set whose state of record is a DataFrame.
+class SeenSet:
+    """Partitioned seen-set whose state of record is a DataFrame.
 
     The driver holds only geometry (P, n_bits, n_hashes) and an item
-    counter; bitmap bytes live in ``self.df`` partition rows, built, merged
-    and probed executor-side. ``to_df()`` is the checkpoint surface (write
-    the rows to the snapshot store); ``from_df`` is the resume surface.
+    counter; slice bytes live in ``self.df`` partition rows, updated and
+    probed executor-side. ``to_df()`` is the checkpoint surface (write the
+    rows to the snapshot store); ``from_df`` is the resume surface.
+    Subclasses supply ``kind``, ``params`` and ``_codec``; either kind's
+    slice is ``n_bits // 8`` bytes, all zero when empty.
     """
-
-    kind = "bloom"
 
     def __init__(
         self,
@@ -100,7 +105,6 @@ class BloomSeenSet:
         n_hashes: int,
         df: DataFrame | None = None,
         n_items: int = 0,
-        broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
     ):
         self.spark = spark
         self.n_partitions = n_partitions
@@ -108,31 +112,28 @@ class BloomSeenSet:
         self.n_hashes = n_hashes
         self.df = df if df is not None else spark.createDataFrame([], FILTER_SCHEMA)
         self.n_items = n_items
-        self.broadcast_max_bytes = broadcast_max_bytes
         self._bcast = None  # cached broadcast of collected slices; None = stale
 
     # -- construction ---------------------------------------------------------
-    @classmethod
-    def empty(
-        cls,
-        spark: SparkSession,
-        n_partitions: int,
-        expected_keys: int,
-        broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
-    ) -> "BloomSeenSet":
-        n_bits, n_hashes = bloom_params(expected_keys, n_partitions)
-        return cls(spark, n_partitions, n_bits, n_hashes,
-                   broadcast_max_bytes=broadcast_max_bytes)
+    @staticmethod
+    def params(expected_keys: int, n_partitions: int) -> tuple[int, int]:
+        """(n_bits, n_hashes) of one partition slice."""
+        raise NotImplementedError
+
+    def _codec(self) -> tuple:
+        """(decode, lookup, insert), bound to plain-int geometry only:
+        ``decode(blob) -> slice``, ``lookup(stacked_slices, pid, fps) ->
+        bool array`` and ``insert(slice, fps) -> n_added`` (in place)."""
+        raise NotImplementedError
 
     @classmethod
-    def from_df(
-        cls,
-        df: DataFrame,
-        n_partitions: int,
-        broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
-    ) -> "BloomSeenSet":
+    def empty(cls, spark: SparkSession, n_partitions: int, expected_keys: int):
+        return cls(spark, n_partitions, *cls.params(expected_keys, n_partitions))
+
+    @classmethod
+    def from_df(cls, df: DataFrame, n_partitions: int):
         """Resume from checkpointed partition rows. One metadata-sized
-        aggregate for the geometry + item count; bitmap rows stay
+        aggregate for the geometry + item count; slice rows stay
         distributed."""
         head = df.agg(
             F.first("n_bits").alias("n_bits"),
@@ -140,14 +141,11 @@ class BloomSeenSet:
             F.sum("n_items").alias("n_items"),
         ).collect()
         if not head or head[0]["n_bits"] is None:
-            return cls(df.sparkSession, n_partitions,
-                       MIN_PARTITION_BITS, DEFAULT_N_HASHES,
-                       broadcast_max_bytes=broadcast_max_bytes)
+            return cls.empty(df.sparkSession, n_partitions, 1)
         return cls(
             df.sparkSession, n_partitions,
             int(head[0]["n_bits"]), int(head[0]["n_hashes"]),
             df=df, n_items=int(head[0]["n_items"]),
-            broadcast_max_bytes=broadcast_max_bytes,
         )
 
     def to_df(self) -> DataFrame:
@@ -172,68 +170,55 @@ class BloomSeenSet:
     def total_bytes(self) -> int:
         return self.n_partitions * (self.n_bits // 8)
 
-    # -- build + merge (executor-side) ---------------------------------------
-    def _build_delta(self, keys: DataFrame, fp_col: str) -> DataFrame:
+    # -- update (executor-side) ------------------------------------------------
+    def _update(self, keys: DataFrame, fp_col: str, apply, sign: int) -> None:
+        """Co-shuffle keys with their partition slice and ``apply(slice,
+        fps)`` inside the cogroup task — slice-local, no driver bitmap; its
+        return value, times ``sign``, moves the row's ``n_items``. The
+        driver sees only the summed item count (P-row aggregate)."""
+        decode = self._codec()[0]
         n_bits, n_hashes = self.n_bits, self.n_hashes
 
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            arr = np.zeros(n_bits // 8, dtype=np.uint8)
-            fps = pdf[fp_col].to_numpy(dtype=np.int64)
-            pos = bloom_positions(fps, n_bits, n_hashes).ravel()
-            np.bitwise_or.at(arr, (pos >> np.uint64(3)).astype(np.int64),
-                             np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))
+        def apply_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            if right.empty:
+                pid, items, blob = int(left["__pid"].iloc[0]), 0, bytes(n_bits // 8)
+            else:
+                pid = int(right["partition_id"].iloc[0])
+                items, blob = int(right["n_items"].iloc[0]), right["bloom"].iloc[0]
+            slice_ = decode(blob).copy()
+            items += sign * apply(slice_, left["fp"].to_numpy(dtype=np.int64))
             return pd.DataFrame(
                 {
-                    "partition_id": [int(pdf["__pid"].iloc[0])],
-                    "bloom": [arr.tobytes()],
-                    "n_items": [len(fps)],
+                    "partition_id": [pid],
+                    "bloom": [slice_.tobytes()],
+                    "n_items": [items],
                     "n_bits": [n_bits],
                     "n_hashes": [n_hashes],
                 }
             )
 
-        return (
-            keys.select(F.col(fp_col), _pid(fp_col, self.n_partitions).alias("__pid"))
-            .groupBy("__pid")
-            .applyInPandas(build, FILTER_SCHEMA)
+        fps = keys.select(
+            F.col(fp_col).alias("fp"), _pid(fp_col, self.n_partitions).alias("__pid")
         )
-
-    def add_keys(self, keys: DataFrame, fp_col: str = "url_fp") -> None:
-        """OR the keys' partition deltas into the filter — fully
-        executor-side (union + groupBy + OR-reduce); the driver sees only
-        the summed item count (P-row aggregate). The merged result is
-        eagerly localCheckpoint-ed so per-epoch lineage doesn't stack."""
-        n_bits, n_hashes = self.n_bits, self.n_hashes
-        delta = self._build_delta(keys, fp_col)
-
-        def or_reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-            arr = np.zeros(n_bits // 8, dtype=np.uint8)
-            for blob in pdf["bloom"]:
-                arr |= np.frombuffer(blob, dtype=np.uint8)
-            return pd.DataFrame(
-                {
-                    "partition_id": [int(pdf["partition_id"].iloc[0])],
-                    "bloom": [arr.tobytes()],
-                    "n_items": [int(pdf["n_items"].sum())],
-                    "n_bits": [n_bits],
-                    "n_hashes": [n_hashes],
-                }
-            )
-
-        merged = (
-            self.df.unionByName(delta)
-            .groupBy("partition_id")
-            .applyInPandas(or_reduce, FILTER_SCHEMA)
+        self.df = (
+            fps.groupBy("__pid")
+            .cogroup(self.df.groupBy(F.col("partition_id").cast("int")))
+            .applyInPandas(apply_group, FILTER_SCHEMA)
             # lazy: the n_items aggregate below is the job that computes
             # (and thereby materializes) the checkpoint — eager=True would
             # spend a whole extra job per epoch on the same work
             .localCheckpoint(eager=False)
         )
-        self.df = merged
-        # metadata-sized aggregate (one long), not the bitmap
-        row = merged.agg(F.sum("n_items").alias("n")).collect()[0]
+        # metadata-sized aggregate (one long), not the slices
+        row = self.df.agg(F.sum("n_items").alias("n")).collect()[0]
         self.n_items = int(row["n"] or 0)
         self._invalidate_bcast()
+
+    def add_keys(self, keys: DataFrame, fp_col: str = "url_fp") -> None:
+        """Insert the keys into their partition slices, one cogroup pass;
+        the result is localCheckpoint-ed so per-epoch lineage doesn't
+        stack."""
+        self._update(keys, fp_col, self._codec()[2], 1)
 
     # -- probe ----------------------------------------------------------------
     def probe(self, df: DataFrame, fp_col: str) -> DataFrame:
@@ -241,77 +226,94 @@ class BloomSeenSet:
         co-shuffled per-partition probe at scale."""
         if self.n_items == 0:
             return df.withColumn("maybe_seen", F.lit(False))
-        if self.total_bytes <= self.broadcast_max_bytes:
+        if self.total_bytes <= BROADCAST_MAX_BYTES:
             return self._probe_broadcast(df, fp_col)
         return self._probe_partitioned(df, fp_col)
 
-    def _collect_slices(self) -> np.ndarray:
-        bitmap = np.zeros((self.n_partitions, self.n_bits // 8), dtype=np.uint8)
-        for r in self.df.collect():  # gated: total_bytes ≤ broadcast_max_bytes
-            bitmap[int(r["partition_id"])] |= np.frombuffer(
-                bytes(r["bloom"]), dtype=np.uint8
-            )
-        return bitmap
-
     def _probe_broadcast(self, df: DataFrame, fp_col: str) -> DataFrame:
+        decode, lookup, _ = self._codec()
         if self._bcast is None:
-            self._bcast = df.sparkSession.sparkContext.broadcast(
-                (self._collect_slices(), self.n_partitions,
-                 self.n_bits, self.n_hashes)
-            )
+            zero = decode(bytes(self.n_bits // 8))
+            slices = np.zeros((self.n_partitions, *zero.shape), dtype=zero.dtype)
+            for r in self.df.collect():  # gated: total_bytes ≤ BROADCAST_MAX_BYTES
+                slices[int(r["partition_id"])] = decode(r["bloom"])
+            self._bcast = df.sparkSession.sparkContext.broadcast(slices)
         b = self._bcast
 
         @F.pandas_udf(T.BooleanType())
         def probe(fps: pd.Series) -> pd.Series:
-            bitmap, n_parts, n_bits, n_hashes = b.value
+            slices = b.value
             a = fps.to_numpy(dtype=np.int64)
-            pid = (a % n_parts + n_parts) % n_parts  # pmod
-            pos = bloom_positions(a, n_bits, n_hashes)
-            byte_idx = (pos >> np.uint64(3)).astype(np.int64)
-            bit = np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
-            hit = (bitmap[pid[:, None], byte_idx] & bit) != 0
-            return pd.Series(hit.all(axis=1))
+            # pmod: numpy's % takes the sign of the (positive) divisor
+            return pd.Series(lookup(slices, a % slices.shape[0], a))
 
         return df.withColumn("maybe_seen", probe(F.col(fp_col)))
 
     def _probe_partitioned(self, df: DataFrame, fp_col: str) -> DataFrame:
         """Candidates shuffle ONCE on pmod(fp, P) to meet their slice; each
         cogroup task holds exactly one slice (total_bytes / P), so no task —
-        let alone the driver — ever sees the whole bitmap."""
-        n_bits, n_hashes = self.n_bits, self.n_hashes
+        let alone the driver — ever sees the whole filter. Distinct fps are
+        probed, then ``maybe_seen`` is joined back on fp."""
+        decode, lookup, _ = self._codec()
 
         def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             fps = left["fp"].to_numpy(dtype=np.int64)
             if right.empty or fps.size == 0:
                 return pd.DataFrame({"fp": fps, "maybe_seen": np.zeros(fps.size, bool)})
-            arr = np.frombuffer(right["bloom"].iloc[0], dtype=np.uint8)
-            pos = bloom_positions(fps, n_bits, n_hashes)
-            byte_idx = (pos >> np.uint64(3)).astype(np.int64)
-            bit = np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
-            hit = (arr[byte_idx] & bit) != 0
-            return pd.DataFrame({"fp": fps, "maybe_seen": hit.all(axis=1)})
+            one = decode(right["bloom"].iloc[0])[None]  # a one-slice stack
+            return pd.DataFrame({"fp": fps, "maybe_seen": lookup(one, 0, fps)})
 
-        return _join_back_probe(df, fp_col, self.df, self.n_partitions, probe_group)
-
-
-def _join_back_probe(df, fp_col, filter_df, n_partitions, probe_group) -> DataFrame:
-    """Shared partitioned-probe plumbing: distinct fps → cogroup with the
-    filter's partition rows → join maybe_seen back on fp."""
-    fps = (
-        df.select(F.col(fp_col).alias("fp")).distinct()
-        .withColumn("__pid", _pid("fp", n_partitions))
-    )
-    probed = (
-        fps.groupBy("__pid")
-        .cogroup(filter_df.groupBy(F.col("partition_id").cast("int")))
-        .applyInPandas(probe_group, "fp long, maybe_seen boolean")
-    )
-    return df.join(
-        probed.withColumnRenamed("fp", fp_col), on=fp_col, how="left"
-    ).withColumn("maybe_seen", F.coalesce("maybe_seen", F.lit(False)))
+        fps = (
+            df.select(F.col(fp_col).alias("fp")).distinct()
+            .withColumn("__pid", _pid("fp", self.n_partitions))
+        )
+        probed = (
+            fps.groupBy("__pid")
+            .cogroup(self.df.groupBy(F.col("partition_id").cast("int")))
+            .applyInPandas(probe_group, "fp long, maybe_seen boolean")
+        )
+        return df.join(
+            probed.withColumnRenamed("fp", fp_col), on=fp_col, how="left"
+        ).withColumn("maybe_seen", F.coalesce("maybe_seen", F.lit(False)))
 
 
-# -- cuckoo table primitives (module-level: closures ship plain ints only) ----
+# -- Bloom slice codec (module-level: closures ship plain ints only) ----------
+
+def _bloom_bits(fps: np.ndarray, n_bits: int, n_hashes: int):
+    """Byte index and bit mask of every fp's ``n_hashes`` positions, (n, k)."""
+    pos = bloom_positions(fps, n_bits, n_hashes)
+    return ((pos >> np.uint64(3)).astype(np.int64),
+            np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))
+
+
+def _bloom_decode(blob) -> np.ndarray:
+    return np.frombuffer(blob, dtype=np.uint8)
+
+
+def _bloom_lookup(slices, pid, fps, n_bits: int, n_hashes: int) -> np.ndarray:
+    byte_idx, bit = _bloom_bits(fps, n_bits, n_hashes)
+    return ((slices[np.reshape(pid, (-1, 1)), byte_idx] & bit) != 0).all(axis=1)
+
+
+def _bloom_insert(bitmap, fps, n_bits: int, n_hashes: int) -> int:
+    byte_idx, bit = _bloom_bits(fps, n_bits, n_hashes)
+    np.bitwise_or.at(bitmap, byte_idx.ravel(), bit.ravel())
+    return fps.size
+
+
+class BloomSeenSet(SeenSet):
+    """Partitioned Bloom seen-set: ``n_bits``-bit slices, ``n_hashes``
+    positions per key; a slice update ORs bits in."""
+
+    kind = "bloom"
+    params = staticmethod(bloom_params)
+
+    def _codec(self) -> tuple:
+        g = {"n_bits": self.n_bits, "n_hashes": self.n_hashes}
+        return _bloom_decode, partial(_bloom_lookup, **g), partial(_bloom_insert, **g)
+
+
+# -- cuckoo slice codec (module-level: closures ship plain ints only) ---------
 
 CUCKOO_TAG_BITS = 12
 CUCKOO_SLOTS = 4
@@ -324,11 +326,12 @@ def _cuckoo_alt(idx: np.ndarray, tag: np.ndarray, nb: int) -> np.ndarray:
     return (idx ^ cuckoo_index_tag(tag.astype(np.int64), nb, CUCKOO_TAG_BITS)[0]) % nb
 
 
-def _cuckoo_insert(table: np.ndarray, fps: np.ndarray, nb: int) -> int:
+def _cuckoo_insert(table: np.ndarray, fps: np.ndarray) -> int:
     """Insert fps into a (nb, SLOTS) uint16 table in place. Vectorized
     two-pass placement (i1 then i2) covers the bulk; the residual (both
     buckets full) runs the classic kick loop. Returns the number of keys
     that could not be placed (callers size by LOAD_FACTOR so this is 0)."""
+    nb = table.shape[0]
     idx, tag = cuckoo_index_tag(fps, nb, CUCKOO_TAG_BITS)
     alt = _cuckoo_alt(idx, tag, nb)
     pending_i, pending_t, pending_a = idx, tag, alt
@@ -369,15 +372,39 @@ def _cuckoo_insert(table: np.ndarray, fps: np.ndarray, nb: int) -> int:
     return failed
 
 
-def _cuckoo_lookup(table: np.ndarray, fps: np.ndarray, nb: int) -> np.ndarray:
-    idx, tag = cuckoo_index_tag(fps, nb, CUCKOO_TAG_BITS)
-    alt = _cuckoo_alt(idx, tag, nb)
+def _cuckoo_decode(blob) -> np.ndarray:
+    return np.frombuffer(blob, dtype=np.uint16).reshape(-1, CUCKOO_SLOTS)
+
+
+def _cuckoo_lookup(tables: np.ndarray, pid, fps: np.ndarray) -> np.ndarray:
+    """Membership of each fp in ``tables[pid]``, a (P, nb, SLOTS) stack."""
+    idx, tag = cuckoo_index_tag(fps, tables.shape[1], CUCKOO_TAG_BITS)
+    alt = _cuckoo_alt(idx, tag, tables.shape[1])
     t = tag[:, None]
-    return ((table[idx] == t) | (table[alt] == t)).any(axis=1)
+    return ((tables[pid, idx] == t) | (tables[pid, alt] == t)).any(axis=1)
 
 
-def _cuckoo_delete(table: np.ndarray, fps: np.ndarray, nb: int) -> int:
-    idx, tag = cuckoo_index_tag(fps, nb, CUCKOO_TAG_BITS)
+def _cuckoo_add(table: np.ndarray, fps: np.ndarray) -> int:
+    """Insert the batch's distinct, not-yet-present fps; returns how many.
+
+    Probe-before-insert: a fingerprint re-added in a later epoch must not
+    consume a second slot. Skipping tag-identical keys never creates a
+    false negative — if (index, tag) is already present, lookup for this
+    key is true forever — and it keeps n_items/occupancy accounting exact,
+    so a later remove_keys can't drift membership state."""
+    fps = np.unique(fps)
+    fps = fps[~_cuckoo_lookup(table[None], 0, fps)]
+    failed = _cuckoo_insert(table, fps)
+    if failed:
+        raise RuntimeError(
+            f"cuckoo partition overfull: {failed} unplaced (resize expected_keys)")
+    return fps.size
+
+
+def _cuckoo_delete(table: np.ndarray, fps: np.ndarray) -> int:
+    """Remove one matching tag per distinct fp; returns how many."""
+    nb = table.shape[0]
+    idx, tag = cuckoo_index_tag(np.unique(fps), nb, CUCKOO_TAG_BITS)
     alt = _cuckoo_alt(idx, tag, nb)
     removed = 0
     for b1, b2, t in zip(idx, alt, tag):
@@ -390,176 +417,41 @@ def _cuckoo_delete(table: np.ndarray, fps: np.ndarray, nb: int) -> int:
     return removed
 
 
-class CuckooSeenSet(BloomSeenSet):
+class CuckooSeenSet(SeenSet):
     """Deletable seen-set: partitioned 4-way cuckoo filter, 12-bit tags.
 
-    Same DataFrame-of-partition-rows state and probe selection as the
-    Bloom; the ``bloom`` column holds the bucket table (n_buckets × 4
-    uint16 tags, 0 = empty) and ``n_bits``/``n_hashes`` carry
-    (n_buckets·64, tag_bits) so FILTER_SCHEMA and the checkpoint path are
-    shared. Supports ``remove_keys`` (frontier retractions) — the reason
+    The ``bloom`` column holds the bucket table (n_buckets × 4 uint16
+    tags, 0 = empty) and ``n_bits``/``n_hashes`` carry (n_buckets·64,
+    tag_bits) so FILTER_SCHEMA and the checkpoint path are shared.
+    Supports ``remove_keys`` (frontier retractions) — the reason
     north_star names the cuckoo variant; a Bloom cannot unset bits.
-
-    Merge caveat: cuckoo tables don't OR-merge, so the per-epoch delta
-    path inserts into the CURRENT partition slice inside the same cogroup
-    task (slice + new keys co-shuffled), not via the Bloom's bitwise OR.
     """
 
     kind = "cuckoo"
-    TAG_BITS = CUCKOO_TAG_BITS
-    SLOTS = CUCKOO_SLOTS
 
-    def __init__(self, spark, n_partitions, n_buckets, df=None, n_items=0,
-                 broadcast_max_bytes: int = BROADCAST_MAX_BYTES):
-        # reuse FILTER_SCHEMA: n_bits := n_buckets*SLOTS*16, n_hashes := TAG_BITS
-        super().__init__(spark, n_partitions, n_buckets * self.SLOTS * 16,
-                         self.TAG_BITS, df=df, n_items=n_items,
-                         broadcast_max_bytes=broadcast_max_bytes)
-        self.n_buckets = n_buckets
-
-    @classmethod
-    def empty(cls, spark, n_partitions, expected_keys,
-              broadcast_max_bytes: int = BROADCAST_MAX_BYTES) -> "CuckooSeenSet":
+    @staticmethod
+    def params(expected_keys: int, n_partitions: int) -> tuple[int, int]:
         per_part = max(1, math.ceil(expected_keys / n_partitions))
         n_buckets = max(64, 1 << math.ceil(
-            math.log2(per_part / (cls.SLOTS * CUCKOO_LOAD_FACTOR) + 1)
+            math.log2(per_part / (CUCKOO_SLOTS * CUCKOO_LOAD_FACTOR) + 1)
         ))
-        return cls(spark, n_partitions, n_buckets,
-                   broadcast_max_bytes=broadcast_max_bytes)
+        return n_buckets * CUCKOO_SLOTS * 16, CUCKOO_TAG_BITS
 
-    @classmethod
-    def from_df(cls, df, n_partitions,
-                broadcast_max_bytes: int = BROADCAST_MAX_BYTES) -> "CuckooSeenSet":
-        head = df.agg(
-            F.first("n_bits").alias("n_bits"),
-            F.sum("n_items").alias("n_items"),
-        ).collect()
-        if not head or head[0]["n_bits"] is None:
-            return cls.empty(df.sparkSession, n_partitions, 1,
-                             broadcast_max_bytes=broadcast_max_bytes)
-        n_buckets = int(head[0]["n_bits"]) // (cls.SLOTS * 16)
-        return cls(df.sparkSession, n_partitions, n_buckets, df=df,
-                   n_items=int(head[0]["n_items"]),
-                   broadcast_max_bytes=broadcast_max_bytes)
-
-    # -- DataFrame surfaces ----------------------------------------------------
-    def _apply_keys(self, keys: DataFrame, fp_col: str, op: str) -> None:
-        """Co-shuffle keys with their partition slice and insert/delete
-        inside the cogroup task — executor-side, slice-local, no driver
-        bitmap. Eager localCheckpoint cuts per-epoch lineage."""
-        nb, n_bits, slots, tag_bits = (
-            self.n_buckets, self.n_bits, self.SLOTS, self.TAG_BITS)
-
-        def apply_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            fps = (left["fp"].to_numpy(dtype=np.int64)
-                   if len(left) else np.empty(0, dtype=np.int64))
-            if right.empty:
-                table = np.zeros((nb, slots), dtype=np.uint16)
-                pid = int(left["__pid"].iloc[0])
-                items = 0
-            else:
-                table = np.frombuffer(
-                    right["bloom"].iloc[0], dtype=np.uint16
-                ).reshape(nb, slots).copy()
-                pid = int(right["partition_id"].iloc[0])
-                items = int(right["n_items"].iloc[0])
-            if op == "insert":
-                # probe-before-insert: a fingerprint re-added in a later
-                # epoch must not consume a second slot (the batch-level
-                # distinct can't see across epochs). Skipping tag-identical
-                # keys never creates a false negative — if (index, tag) is
-                # already present, lookup for this key is true forever —
-                # and it keeps n_items/occupancy accounting exact, so a
-                # later remove_keys can't drift membership state.
-                fps = fps[~_cuckoo_lookup(table, fps, nb)]
-                failed = _cuckoo_insert(table, fps, nb)
-                if failed:
-                    raise RuntimeError(
-                        f"cuckoo partition {pid} overfull: {failed} unplaced "
-                        f"(resize expected_keys)")
-                items += len(fps)
-            else:
-                items -= _cuckoo_delete(table, fps, nb)
-            return pd.DataFrame(
-                {
-                    "partition_id": [pid],
-                    "bloom": [table.tobytes()],
-                    "n_items": [items],
-                    "n_bits": [n_bits],
-                    "n_hashes": [tag_bits],
-                }
-            )
-
-        fps = (
-            keys.select(F.col(fp_col).alias("fp")).distinct()
-            .withColumn("__pid", _pid("fp", self.n_partitions))
-        )
-        self.df = (
-            fps.groupBy("__pid")
-            .cogroup(self.df.groupBy(F.col("partition_id").cast("int")))
-            .applyInPandas(apply_group, FILTER_SCHEMA)
-            # lazy for the same reason as the Bloom merge: the aggregate
-            # below materializes the checkpoint in its own job
-            .localCheckpoint(eager=False)
-        )
-        row = self.df.agg(F.sum("n_items").alias("n")).collect()[0]
-        self.n_items = int(row["n"] or 0)
-        self._invalidate_bcast()
-
-    def add_keys(self, keys: DataFrame, fp_col: str = "url_fp") -> None:
-        self._apply_keys(keys, fp_col, "insert")
+    def _codec(self) -> tuple:
+        return _cuckoo_decode, _cuckoo_lookup, _cuckoo_add
 
     def remove_keys(self, keys: DataFrame, fp_col: str = "url_fp") -> None:
         """Delete previously-inserted keys (standard cuckoo caveat: deleting
         a never-inserted key may evict a colliding tag — callers only
         retract URLs they enqueued)."""
-        self._apply_keys(keys, fp_col, "delete")
-
-    def _probe_broadcast(self, df: DataFrame, fp_col: str) -> DataFrame:
-        nb, slots = self.n_buckets, self.SLOTS
-        if self._bcast is None:
-            tables = np.zeros((self.n_partitions, nb, slots), dtype=np.uint16)
-            for r in self.df.collect():  # gated by broadcast_max_bytes
-                tables[int(r["partition_id"])] = np.frombuffer(
-                    bytes(r["bloom"]), dtype=np.uint16
-                ).reshape(nb, slots)
-            self._bcast = df.sparkSession.sparkContext.broadcast(tables)
-        b = self._bcast
-
-        @F.pandas_udf(T.BooleanType())
-        def probe(fps: pd.Series) -> pd.Series:
-            tables = b.value
-            a = fps.to_numpy(dtype=np.int64)
-            n_parts = tables.shape[0]
-            pid = (a % n_parts + n_parts) % n_parts
-            out = np.zeros(len(a), dtype=bool)
-            for p in np.unique(pid):
-                m = pid == p
-                out[m] = _cuckoo_lookup(tables[p], a[m], nb)
-            return pd.Series(out)
-
-        return df.withColumn("maybe_seen", probe(F.col(fp_col)))
-
-    def _probe_partitioned(self, df: DataFrame, fp_col: str) -> DataFrame:
-        nb, slots = self.n_buckets, self.SLOTS
-
-        def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            fps = left["fp"].to_numpy(dtype=np.int64)
-            if right.empty or fps.size == 0:
-                return pd.DataFrame({"fp": fps, "maybe_seen": np.zeros(fps.size, bool)})
-            table = np.frombuffer(
-                right["bloom"].iloc[0], dtype=np.uint16).reshape(nb, slots)
-            return pd.DataFrame(
-                {"fp": fps, "maybe_seen": _cuckoo_lookup(table, fps, nb)})
-
-        return _join_back_probe(df, fp_col, self.df, self.n_partitions, probe_group)
+        self._update(keys, fp_col, _cuckoo_delete, -1)
 
 
 def filter_unseen(
     candidates: DataFrame,
     seen_keys: DataFrame,
     fp_col: str = "url_fp",
-    bloom: BloomSeenSet | None = None,
+    bloom: SeenSet | None = None,
 ) -> DataFrame:
     """Exact not-seen filter, sketch-accelerated when a filter is supplied.
 

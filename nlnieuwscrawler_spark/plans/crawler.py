@@ -114,7 +114,7 @@ class Crawler:
         self.seq_base = 0
         self.frontier: DataFrame | None = None
         self.seen_keys: DataFrame | None = None
-        self.bloom: seen_op.BloomSeenSet | None = None
+        self.bloom: seen_op.SeenSet | None = None
         self.crawl_log_parts: list[DataFrame] = []
         self.metrics_rows: list[dict] = []
 
@@ -197,7 +197,7 @@ class Crawler:
         next_seen = self.seen_keys.unionByName(res.new_seen.select("url_fp"))
 
         if self.config.use_bloom:
-            # executor-side delta build + OR-merge; driver sees a counter only
+            # one executor-side cogroup update; driver sees a counter only
             self.bloom.add_keys(res.new_seen, "url_fp")
 
         if self.store is not None and self.config.checkpoint:

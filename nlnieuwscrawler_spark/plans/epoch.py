@@ -127,7 +127,7 @@ def run_epoch(
     robots: DataFrame,
     seen_keys: DataFrame,
     epoch: int,
-    bloom: seen_op.BloomSeenSet | None = None,
+    bloom: seen_op.SeenSet | None = None,
     salt: int = 1,
     seq_base: int = 0,
     epoch_seconds: float | None = None,

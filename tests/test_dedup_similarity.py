@@ -472,16 +472,25 @@ def test_containment_pairs_matches_naive_allpairs(spark):
     assert fast == slow
 
 
-def test_containment_pairs_no_bnlj_plan(spark):
-    """Inspect the LAZY form (eager=True returns a checkpoint scan whose
-    plan is vacuously clean): candidates must come from equi-joins only."""
+def test_containment_pairs_no_bnlj_plan(spark, monkeypatch):
+    """Inspect the candidate frame handed to the verify step (the result
+    is a checkpoint scan whose plan is vacuously clean): candidates must
+    come from equi-joins only."""
     df = spark.createDataFrame(
         [(i, f"w{i} a b c d e f g h", "nl") for i in range(12)],
         "doc_id long, text string, lang string",
     )
-    out = dedup.containment_pairs(df, threshold=0.8, eager=False)
-    out.count()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    captured = []
+    verify = dedup._verify_pairs
+
+    def recording_verify(cand, *args):
+        captured.append(cand)
+        return verify(cand, *args)
+
+    monkeypatch.setattr(dedup, "_verify_pairs", recording_verify)
+    dedup.containment_pairs(df, threshold=0.8)
+    (cand,) = captured
+    cand.collect()
+    plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan, plan
     assert "BroadcastNestedLoop" not in plan and "Cartesian" not in plan
-    spark.catalog.clearCache()  # lazy form leaves the internal caches live
