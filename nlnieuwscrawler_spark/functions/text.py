@@ -1029,21 +1029,6 @@ def dedup_lines(df, text_col: str = "text", id_col: str = "doc_id"):
     )
 
 
-def _boilerplate_lines(df, min_docs, text_col, id_col, group_col):
-    """The (group, line) high-document-frequency survivor set behind
-    :func:`boilerplate_scrub` — one map-side-combinable distinct-doc
-    count over narrow rows."""
-    exploded = df.select(
-        F.col(group_col), F.col(id_col),
-        F.explode(F.split(F.col(text_col), "\n")).alias("__line"),
-    ).filter(F.col("__line") != "")
-    return (
-        exploded.groupBy(group_col, "__line")
-        .agg(F.countDistinct(id_col).alias("__df"))
-        .filter(F.col("__df") >= F.lit(min_docs))
-    )
-
-
 def boilerplate_sets(
     df,
     min_docs: int = 3,
@@ -1052,18 +1037,26 @@ def boilerplate_sets(
     group_col: str = "source",
 ):
     """Per-group boilerplate-line arrays (group, __bl) — the tiny
-    broadcast side of the scrub, exposed so composites can attach it
-    with a broadcast join and rewrite the text in place (see
+    broadcast side of :func:`boilerplate_scrub`: one map-side-combinable
+    (group, line) distinct-doc count over narrow rows, then the high-df
+    survivors rolled into one array per group. Exposed so composites can
+    attach it with a broadcast join and rewrite the text in place (see
     :func:`line_dedup_struct`)."""
+    exploded = df.select(
+        F.col(group_col), F.col(id_col),
+        F.explode(F.split(F.col(text_col), "\n")).alias("__line"),
+    ).filter(F.col("__line") != "")
     return (
-        _boilerplate_lines(df, min_docs, text_col, id_col, group_col)
+        exploded.groupBy(group_col, "__line")
+        .agg(F.countDistinct(id_col).alias("__df"))
+        .filter(F.col("__df") >= F.lit(min_docs))
         .groupBy(group_col)
         .agg(F.collect_set("__line").alias("__bl"))
     )
 
 
 def boilerplate_scrub_struct(text: Column, bl: Column) -> Column:
-    """Expression form of the broadcast-mode scrub — struct(n_lines,
+    """Expression form of :func:`boilerplate_scrub` — struct(n_lines,
     n_boiler, text_clean) over one text column given the group's
     boilerplate-line array ``bl``."""
     ls_expr = F.split(text, "\n")
@@ -1085,7 +1078,6 @@ def boilerplate_scrub(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "source",
-    mode: str = "broadcast",
 ):
     """Cross-document boilerplate removal (the CORPUS-level complement
     to ``dedup_lines``): a line is boilerplate within its group
@@ -1096,75 +1088,31 @@ def boilerplate_scrub(
     CCNet's shard-level paragraph dedup / RefinedWeb's line-level
     filtering generalized to an explicit document-frequency rule. Empty
     lines are never boilerplate: they are layout, and scrubbing them
-    would shift every paragraph boundary in the survivors.
+    would shift every paragraph boundary in the survivors. A document
+    whose every line is boilerplate survives as the empty document.
 
-    100 TB shape (``mode="broadcast"``, default): the corpus-line
-    explode feeds ONE map-side-combinable (group, line) distinct-doc
-    count over narrow (group, id, line) rows; only the tiny high-df
-    survivor set is rolled into per-group arrays and BROADCAST back, so
-    the corpus itself crosses ZERO exchanges — the scrub is a
-    higher-order filter inside whole-stage codegen (plan-pinned by
-    tests/test_curation.py). Real sites have tens-to-hundreds of
-    template lines, so the broadcast is KBs per group.
-    ``mode="join"`` is the escape hatch for pathological template farms
-    whose boiler set would not fit a broadcast: posexplode → left-anti
-    equi-join on (group, line) → positional rebuild; one corpus-line
-    shuffle, no size assumption. Both modes are bit-identical
-    (pytest-pinned, including the all-boilerplate document that the
-    naive rebuild-by-groupBy drops).
+    100 TB shape: the corpus-line explode feeds ONE
+    map-side-combinable (group, line) distinct-doc count over narrow
+    (group, id, line) rows; only the tiny high-df survivor set is
+    rolled into per-group arrays and BROADCAST back
+    (:func:`boilerplate_sets`), so the corpus itself crosses ZERO
+    exchanges — the scrub is a higher-order filter inside whole-stage
+    codegen (plan-pinned by tests/test_curation.py). Real sites have
+    tens-to-hundreds of template lines, so the broadcast is KBs per
+    group.
 
     The line split is bound once as a lambda variable (the
     ``dedup_lines`` CSE note applies verbatim).
     """
-    if mode not in ("broadcast", "join"):
-        raise ValueError(f"unknown mode {mode!r}")
-    lines_expr = F.split(F.col(text_col), "\n")
-    boiler = _boilerplate_lines(df, min_docs, text_col, id_col, group_col)
-
-    if mode == "broadcast":
-        ba = boiler.groupBy(group_col).agg(
-            F.collect_set("__line").alias("__bl")
-        )
-        j = df.join(F.broadcast(ba), on=group_col, how="left")
-        bl = F.coalesce(F.col("__bl"), F.array().cast("array<string>"))
-        s = boilerplate_scrub_struct(F.col(text_col), bl)
-        return j.select(
-            F.col(id_col),
-            s["n_lines"].alias("n_lines"),
-            s["n_boiler"].alias("n_boiler"),
-            s["text_clean"].alias("text_clean"),
-        )
-
-    # mode == "join": no broadcast-size assumption. Empty lines never
-    # reach `boiler` (filtered above), so the anti-join keeps them — the
-    # two modes agree on layout lines by construction.
-    pos = df.select(
-        F.col(group_col),
+    ba = boilerplate_sets(df, min_docs, text_col, id_col, group_col)
+    j = df.join(F.broadcast(ba), on=group_col, how="left")
+    bl = F.coalesce(F.col("__bl"), F.array().cast("array<string>"))
+    s = boilerplate_scrub_struct(F.col(text_col), bl)
+    return j.select(
         F.col(id_col),
-        F.posexplode(lines_expr).alias("__pos", "__line"),
-    )
-    kept = pos.join(boiler.select(group_col, "__line"),
-                    on=[group_col, "__line"], how="left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("__n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__pos", "__line"))),
-                lambda st: st["__line"],
-            ),
-            "\n",
-        ).alias("__text_clean"),
-    )
-    # left join back so an ALL-boilerplate doc survives as the empty doc
-    base = df.select(
-        F.col(id_col), F.size(lines_expr).cast("long").alias("n_lines")
-    )
-    return base.join(rebuilt, on=id_col, how="left").select(
-        F.col(id_col),
-        F.col("n_lines"),
-        (F.col("n_lines") - F.coalesce(F.col("__n_kept"), F.lit(0)))
-        .cast("long").alias("n_boiler"),
-        F.coalesce(F.col("__text_clean"), F.lit("")).alias("text_clean"),
+        s["n_lines"].alias("n_lines"),
+        s["n_boiler"].alias("n_boiler"),
+        s["text_clean"].alias("text_clean"),
     )
 
 

@@ -2,15 +2,13 @@
 
 The Spark-side machinery is REAL and tested: schema, partition-friendly
 batch iteration (mapInPandas), Arrow batch shapes, deterministic feature
-extraction plumbing. The codec layer is STUBBED — the sandbox has no
-image/audio libraries — behind ``decode_backend``:
-
-- ``"fake"`` (default): a deterministic pure-numpy "decoder" that derives a
-  fixed-length feature vector from the payload bytes (splitmix64-seeded).
-  Lets every downstream stage (resize → embed → dedup-by-feature) run and
-  be tested end-to-end with real Spark plumbing.
-- ``"pillow"`` / ``"ffmpeg"``: raise NotImplementedError with install
-  guidance — swap-in points for real codecs on a cluster image.
+extraction plumbing. The codec is ONE deterministic fake: a pure-numpy
+"decoder" that derives a fixed-length feature vector from the payload
+bytes (splitmix64-seeded), and a resize that reads the payload as a
+grayscale grid. Both are pure functions of the bytes, so every downstream
+stage (resize → embed → dedup-by-feature) runs and is tested end-to-end
+with real Spark plumbing. A real codec replaces the per-batch function
+body; the Spark shape does not change.
 
 At 100 TB the pattern matters more than the codec: payloads stay in
 ``binary`` columns (never strings — no re-encoding), batches flow through
@@ -58,23 +56,13 @@ def _fake_decode_features(payloads: pd.Series) -> np.ndarray:
     return out
 
 
-def decode_features(
-    media: DataFrame, backend: str = "fake", batch_note: str = ""
-) -> DataFrame:
+def decode_features(media: DataFrame) -> DataFrame:
     """media(media_id, kind, payload, meta) → per-item feature vectors.
 
     mapInPandas: per-partition Arrow batch iteration, no driver involvement,
-    embarrassingly parallel — the decode stage's scale shape regardless of
-    backend.
+    embarrassingly parallel — the decode stage's scale shape whatever the
+    codec.
     """
-    if backend not in ("fake", "pillow", "ffmpeg"):
-        raise ValueError(f"unknown backend {backend!r}")
-    if backend != "fake":
-        raise NotImplementedError(
-            f"{backend} codec not available in this environment; install the "
-            f"codec libs on the cluster image and implement the decode here. "
-            f"The Spark plumbing (schema, batching, partitioning) is identical."
-        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -131,11 +119,11 @@ RESIZE_SCHEMA_DDL = (
 
 
 def media_resize(
-    media: DataFrame, out_w: int = 8, out_h: int = 8, backend: str = "fake"
+    media: DataFrame, out_w: int = 8, out_h: int = 8
 ) -> DataFrame:
     """Image resize plumbing: payload → fixed (out_h × out_w) thumbnail.
 
-    The ``fake`` backend REALLY resizes — it interprets the payload as a
+    The fake codec REALLY resizes — it interprets the payload as a
     grayscale grid (dims from ``meta['width']/['height']``, else a square
     inferred from the byte count; padded with zeros), then block-area
     averages down to (out_h, out_w) uint8 — a pure, deterministic function
@@ -144,13 +132,6 @@ def media_resize(
     batches, output stays a ``binary`` column (never a string — no
     re-encoding), embarrassingly parallel, no driver involvement.
     """
-    if backend not in ("fake", "pillow"):
-        raise ValueError(f"unknown backend {backend!r}")
-    if backend != "fake":
-        raise NotImplementedError(
-            "pillow codec not available in this environment; implement "
-            "Image.open(BytesIO(payload)).resize((out_w, out_h)) here."
-        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -126,8 +126,7 @@ def _assign_expr(df: DataFrame, centroids: list[tuple[int, list[float]]],
 
 
 def _fit_centroids(
-    base: DataFrame, k: int, iters: int, vec_col: str, id_col: str,
-    cache: bool = True,
+    base: DataFrame, k: int, iters: int, vec_col: str, id_col: str
 ) -> list[tuple[int, list[float]]]:
     """The k-means iteration loop; returns the final centroids.
 
@@ -143,13 +142,8 @@ def _fit_centroids(
 
     # the loop evaluates `base` iters+1 times (init collect + one update
     # agg per iteration) — uncached that is iters+1 full SOURCE scans,
-    # which on a cluster reading remote parquet dominates. cache=False
-    # opts out for warm local storage, where the A/B measured the row
-    # cache ~10% SLOWER at 1M×64-d (page-cached columnar scans beat the
-    # fatter deserialized row cache; BENCH/BASELINE.md round-5 note) —
-    # the default stays cluster-first.
-    if cache:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # which on a cluster reading remote parquet dominates
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
     init_rows = (
         base.orderBy(id_col).limit(k)
         .select(F.col(vec_col))
@@ -188,8 +182,7 @@ def _fit_centroids(
             (cid, [new[cid][p] for p in range(len(old))] if cid in new else old)
             for cid, old in centroids
         ]
-    if cache:
-        base.unpersist()
+    base.unpersist()
     return centroids
 
 
@@ -200,14 +193,13 @@ def kmeans_embeddings(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     stats: dict | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Fixed-iteration k-means over an embedding column →
     (id, cluster, sqdist). See ``_fit_centroids`` for the deterministic
-    semantics (and the ``cache`` trade-off); the returned frame is the
-    final zero-shuffle assignment projection."""
+    semantics; the returned frame is the final zero-shuffle assignment
+    projection."""
     base = df.select(F.col(id_col), F.col(vec_col))
-    centroids = _fit_centroids(base, k, iters, vec_col, id_col, cache=cache)
+    centroids = _fit_centroids(base, k, iters, vec_col, id_col)
     if stats is not None:
         stats["iters"] = iters
         stats["centroids"] = centroids
@@ -223,7 +215,6 @@ def semdedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache: bool = True,
     max_cluster: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -260,7 +251,7 @@ def semdedup(
     import pandas as pd
 
     base = df.select(F.col(id_col), F.col(vec_col))
-    centroids = _fit_centroids(base, k, iters, vec_col, id_col, cache=cache)
+    centroids = _fit_centroids(base, k, iters, vec_col, id_col)
     labeled = (
         _assign(base, centroids, vec_col)
         .select(id_col, "cluster", vec_col)

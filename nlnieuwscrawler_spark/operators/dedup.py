@@ -451,7 +451,6 @@ def decontaminate(
     eval_text_col: str = "text",
     n: int = 3,
     min_overlap: int = 8,
-    broadcast_eval: bool = True,
     spread: bool = True,
 ) -> DataFrame:
     """Flag corpus docs sharing ≥ ``min_overlap`` distinct word n-grams
@@ -485,12 +484,8 @@ def decontaminate(
     eval_grams = eval_docs.select(
         eval_id_col, F.explode(word_ngrams(F.col(eval_text_col), n)).alias("__g")
     )
-    # broadcast_eval=False for eval suites too large to broadcast
-    # (>~1 GB of grams): plain gram-keyed shuffle hash join instead —
-    # still linear, just pays one corpus-gram shuffle
-    right = F.broadcast(eval_grams) if broadcast_eval else eval_grams
     return (
-        corpus_grams.join(right, "__g")
+        corpus_grams.join(F.broadcast(eval_grams), "__g")
         .groupBy(id_col, eval_id_col)
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_overlap)

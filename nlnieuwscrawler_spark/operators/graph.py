@@ -31,7 +31,6 @@ def host_pagerank(
     damping: float = 0.85,
     iters: int = 5,
     reliable: bool = False,
-    broadcast_ranks: bool = True,
     stats: dict | None = None,
     seeds: list[int] | None = None,
 ) -> DataFrame:
@@ -53,15 +52,13 @@ def host_pagerank(
     power iterations is plenty for a priority signal).
 
     100 TB shape: the rank table is |hosts| rows (~10^7 at web scale) —
-    broadcast to the edge join by default (``broadcast_ranks=False``
-    falls back to a shuffle hash join keyed by src for host cardinalities
-    past broadcast range); out-degrees are computed ONCE and persisted
-    with the edges; the only per-iteration shuffle is the groupBy(dst)
-    partial-aggregated sum, moving (dst, decimal) pairs — never the edge
-    payload. The dangling mass is a scalar per round (metadata-sized
-    collect, same pattern as dedup_components' convergence sum);
-    per-round lineage cuts stop iterative-plan blowup, ``reliable=True``
-    routes them through the durable checkpoint dir.
+    broadcast to the edge join; out-degrees are computed ONCE and
+    persisted with the edges; the only per-iteration shuffle is the
+    groupBy(dst) partial-aggregated sum, moving (dst, decimal) pairs —
+    never the edge payload. The dangling mass is a scalar per round
+    (metadata-sized collect, same pattern as dedup_components'
+    convergence sum); per-round lineage cuts stop iterative-plan blowup,
+    ``reliable=True`` routes them through the durable checkpoint dir.
 
     ``seeds`` personalizes the teleport vector (TrustRank — Gyöngyi,
     Garcia-Molina & Pedersen 2004, public): with a seed host list, ALL
@@ -109,9 +106,7 @@ def host_pagerank(
     )
 
     for _ in range(iters):
-        new = _pagerank_step(
-            e, outd, nodes, ranks, n_nodes, damping, broadcast_ranks, seeds
-        )
+        new = _pagerank_step(e, outd, nodes, ranks, n_nodes, damping, seeds)
         ranks = cut_lineage(new, reliable, eager=False)
     if stats is not None:
         stats["rounds"] = iters
@@ -125,7 +120,6 @@ def _pagerank_step(
     ranks: DataFrame,
     n_nodes: int,
     damping: float = 0.85,
-    broadcast_ranks: bool = True,
     seeds: list[int] | None = None,
 ) -> DataFrame:
     """One power iteration as a single (un-cut) plan — split out so plan
@@ -141,11 +135,10 @@ def _pagerank_step(
         .collect()[0]["s"]
     )
     dm = float(dm_row) if dm_row is not None else 0.0
-    r = F.broadcast(ranks) if broadcast_ranks else ranks
-    o = F.broadcast(outd) if broadcast_ranks else outd
+    r = F.broadcast(ranks)
     contrib = (
         e.join(r, e["src"] == r["host"])
-        .join(o, "src")
+        .join(F.broadcast(outd), "src")
         .select(
             "dst",
             F.round(F.col("rank") / F.col("outdeg"), 12)
@@ -189,7 +182,6 @@ def trustrank(
     damping: float = 0.85,
     iters: int = 5,
     reliable: bool = False,
-    broadcast_ranks: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004) → (host,
@@ -211,7 +203,6 @@ def trustrank(
         damping=damping,
         iters=iters,
         reliable=reliable,
-        broadcast_ranks=broadcast_ranks,
         stats=stats,
         seeds=seeds,
     )
@@ -223,7 +214,6 @@ def crawl_depth(
     seeds: list[int],
     max_depth: int = 30,
     reliable: bool = False,
-    broadcast_frontier: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """Min-hop BFS distance from the seed hosts → (host, depth); NULL
@@ -237,12 +227,10 @@ def crawl_depth(
     first reached at round r-1 against the edge list, so each round
     shuffles the frontier's out-edges — work proportional to the BFS
     wavefront, never |V|x rounds. The frontier broadcasts to the edge
-    join by default; at web scale the depth-2/3 wavefront can be most of
-    the host graph, so ``broadcast_frontier=False`` switches to a
-    src-keyed shuffle hash join. Terminates when the frontier empties
-    (one metadata-sized count per round, same pattern as
-    dedup_components' convergence sum) or at ``max_depth``. Distances
-    are integers — exact on any engine by construction.
+    join. Terminates when the frontier empties (one metadata-sized count
+    per round, same pattern as dedup_components' convergence sum) or at
+    ``max_depth``. Distances are integers — exact on any engine by
+    construction.
     """
     spark = edges.sparkSession
     e = edges.select(
@@ -266,7 +254,7 @@ def crawl_depth(
     rounds = 0
     for r in range(1, max_depth + 1):
         rounds = r
-        fr = F.broadcast(frontier) if broadcast_frontier else frontier
+        fr = F.broadcast(frontier)
         reached = (
             e.join(fr, e["src"] == fr["host"])
             .select(F.col("dst").alias("host"))

@@ -26,7 +26,6 @@ def stratified_sample(
     id_col: str = "doc_id",
     salt: int = 8,
     rank_col: str = "sample_rank",
-    joinback: str = "broadcast",
 ) -> DataFrame:
     """Keep a deterministic ``quota``-sized sample per stratum.
 
@@ -44,11 +43,9 @@ def stratified_sample(
     salted rank as the politeness ranker, operators/politeness.py, so the
     Zipf head stratum never lands in one task). Phase 2 ranks the
     ≤ salt×quota survivors per stratum exactly. The ≤ quota×strata winner
-    ids then join back to the corpus — broadcast by default, so the corpus
-    side is a zero-shuffle scan + hash probe; pass ``joinback="shuffle"``
-    when strata×quota is itself too big to broadcast (Catalyst/AQE then
-    picks the join). Identical output to the single-window form at any
-    salt or joinback mode.
+    ids then join back to the corpus as a broadcast, so the corpus side
+    is a zero-shuffle scan + hash probe. Identical output to the
+    single-window form at any salt.
     """
     key = F.md5(F.col(id_col).cast("string"))
     narrow = df.select(id_col, strata_col).withColumn("__rk", key)
@@ -76,11 +73,7 @@ def stratified_sample(
         .filter(F.col(rank_col) <= quota)
         .select(id_col, rank_col)
     )
-    if joinback == "broadcast":
-        winners = F.broadcast(winners)
-    elif joinback != "shuffle":
-        raise ValueError(f"unknown joinback {joinback!r}")
-    return df.join(winners, on=id_col, how="inner")
+    return df.join(F.broadcast(winners), on=id_col, how="inner")
 
 
 def pack_sequences(

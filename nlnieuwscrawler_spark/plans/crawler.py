@@ -20,7 +20,7 @@ from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401 (used in metrics_cube)
+from pyspark.sql import functions as F
 
 from nlnieuwscrawler_spark import spec
 from nlnieuwscrawler_spark.operators import asof, seen as seen_op
@@ -29,6 +29,12 @@ from nlnieuwscrawler_spark.sources.tableio import SnapshotStore
 
 SEEN_SCHEMA = "url_fp long"
 BLOOM_SCHEMA = "partition_id int, bloom binary, n_items long, n_bits long, n_hashes int"
+# run_epoch's crawl_log columns: the log of a crawl that ran no epoch
+CRAWL_LOG_SCHEMA = (
+    "epoch int, seq long, url string, url_fp long, host string, depth int, "
+    "fetch_ts timestamp, status string, title string, text_sha string, "
+    "page_lang string"
+)
 
 
 @dataclass
@@ -256,19 +262,18 @@ class Crawler:
 
     # -- outputs ---------------------------------------------------------------
     def crawl_log(self) -> DataFrame:
+        parts = self.crawl_log_parts
         if self.store is not None and self.config.checkpoint:
-            m = self.store.read_manifest()
+            m = self.store.read_manifest()  # None before the first commit
             parts = []
-            for v in range(1, m["version"] + 1):
+            for v in range(1, (m["version"] if m else 0) + 1):
                 mv = self.store.read_manifest(v)
                 if mv and "crawl_log" in mv["tables"]:
                     parts.append(self.store.read_table(self.spark, "crawl_log", v))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-        out = self.crawl_log_parts[0]
-        for p in self.crawl_log_parts[1:]:
+        if not parts:
+            return self.spark.createDataFrame([], CRAWL_LOG_SCHEMA)
+        out = parts[0]
+        for p in parts[1:]:
             out = out.unionByName(p)
         return out
 

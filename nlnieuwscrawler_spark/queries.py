@@ -1552,7 +1552,7 @@ ORDER BY user_id, session_start
 
 def q_media_features(spark, sf_dir):
     """Multimodal plumbing: binary payload column → mapInPandas decode
-    (deterministic fake backend) → per-kind stats. Byte counts oracle-able;
+    (deterministic fake codec) → per-kind stats. Byte counts oracle-able;
     feature values are engine-side."""
     from nlnieuwscrawler_spark.multimodal.media import (
         decode_features,
@@ -1561,7 +1561,7 @@ def q_media_features(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents")
     media = synth_media_from_documents(d)
-    feats = decode_features(media, backend="fake")
+    feats = decode_features(media)
     return (
         feats.groupBy("kind")
         .agg(

@@ -96,7 +96,6 @@ def run_epoch_stream(
     frontier_stream: DataFrame,
     pages_latest: DataFrame,
     robots: DataFrame,
-    out_table: str = "stream_crawl_log",
 ):
     """Drive the batch epoch plan per micro-batch (foreachBatch): each batch
     of frontier candidates goes through robots→politeness→fetch→extract and

@@ -598,29 +598,8 @@ def test_boilerplate_scrub_pinned_cases(spark):
     assert out[7]["n_boiler"] == 0                   # intra-doc only
 
 
-def test_boilerplate_scrub_modes_identical(spark):
-    """broadcast and join modes must be bit-identical, INCLUDING the
-    all-boilerplate doc the naive groupBy rebuild would drop."""
-    from nlnieuwscrawler_spark.functions.text import boilerplate_scrub
-
-    rows = [
-        (1, "A", "u1\nFOOT\nbody one"),
-        (2, "A", "u2\nFOOT\n\nbody two"),
-        (3, "A", "FOOT\nFOOT\nu3"),
-        (4, "A", "FOOT"),
-        (5, "B", "FOOT\nu5"),
-        (6, "B", ""),
-        (7, "B", "x\nx\nx"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    b = boilerplate_scrub(df, min_docs=3).orderBy("doc_id").toPandas()
-    j = boilerplate_scrub(df, min_docs=3, mode="join").orderBy(
-        "doc_id").toPandas()
-    pd.testing.assert_frame_equal(b, j)
-
-
 def test_boilerplate_scrub_corpus_side_never_shuffles(spark):
-    """The 100 TB claim (broadcast mode): only the narrow exploded
+    """The 100 TB claim: only the narrow exploded
     (group, id, line) rows cross an Exchange — the corpus text column
     reaches the scrub through a BroadcastHashJoin, never a shuffle."""
     from nlnieuwscrawler_spark.functions.text import boilerplate_scrub

@@ -182,3 +182,30 @@ def test_denied_hosts_never_fetched(engine):
     assert not tele["url"].str.contains("/premium").any()
     nu = log[log["host"] == "nu.nl"]
     assert not nu["url"].str.contains("/tag").any()
+
+
+@pytest.mark.parametrize("engine", ["bloom"], indirect=True)
+@pytest.mark.parametrize("with_store", [False, True], ids=["no_store", "snapshot_store"])
+def test_zero_epoch_crawl_outputs_are_empty(
+    spark, tiny_pages_df, engine, with_store, tmp_path
+):
+    """An empty seed list runs no epoch and commits no snapshot; the log
+    and its cube are then empty frames with the log columns of a real
+    crawl, with or without a SnapshotStore."""
+    from nlnieuwscrawler_spark.sources.tableio import SnapshotStore
+
+    c = Crawler(
+        spark,
+        tiny_pages_df,
+        fixtures.robots_df(spark),
+        store=SnapshotStore(str(tmp_path)) if with_store else None,
+        config=CrawlConfig(
+            max_epochs=N_EPOCHS, bloom_partitions=8, bloom_expected_keys=1 << 14
+        ),
+    )
+    assert c.run(seeds=fixtures.seeds_df(spark).limit(0))["epochs"] == 0
+    log = c.crawl_log()
+    assert log.count() == 0
+    assert c.metrics_cube().count() == 0
+    want = [(f.name, f.dataType) for f in engine.crawl_log().schema.fields]
+    assert [(f.name, f.dataType) for f in log.schema.fields] == want

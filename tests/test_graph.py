@@ -71,14 +71,6 @@ def test_pagerank_partitioning_invariance(spark):
     ]  # EXACT float equality — decimal-summed contributions are order-free
 
 
-def test_pagerank_shuffle_join_fallback_matches_broadcast(spark):
-    pairs = [(i % 5, (i + 1) % 5) for i in range(20) if i % 5 != (i + 1) % 5]
-    e = _edges(spark, pairs)
-    a = host_pagerank(e, n_nodes=5, broadcast_ranks=True).orderBy("host").collect()
-    b = host_pagerank(e, n_nodes=5, broadcast_ranks=False).orderBy("host").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
 def test_crawl_depth_chain_and_unreachable(spark):
     from nlnieuwscrawler_spark.operators.graph import crawl_depth
 
@@ -102,7 +94,7 @@ def test_crawl_depth_multi_seed_takes_min(spark):
     assert got == {0: 0, 1: 0, 2: 1, 3: 1}
 
 
-def test_crawl_depth_max_depth_cutoff_and_fallback_parity(spark):
+def test_crawl_depth_max_depth_cutoff(spark):
     from nlnieuwscrawler_spark.operators.graph import crawl_depth
 
     pairs = [(i, i + 1) for i in range(6)]  # 0→1→…→6
@@ -115,11 +107,6 @@ def test_crawl_depth_max_depth_cutoff_and_fallback_parity(spark):
     }
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: None, 5: None, 6: None}
     assert stats["rounds"] == 3  # stopped by the cutoff, not an empty frontier
-    a = crawl_depth(_edges(spark, pairs), n_nodes=7, seeds=[0]).orderBy("host").collect()
-    b = crawl_depth(
-        _edges(spark, pairs), n_nodes=7, seeds=[0], broadcast_frontier=False
-    ).orderBy("host").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
 def test_anchor_rollup_counts_and_tiebreak(spark):

@@ -178,18 +178,6 @@ def test_pack_sequences_property_random_lengths(spark):
         assert bad.empty, (profile, bad)
 
 
-def test_decontaminate_shuffle_mode_identical(spark, docs):
-    """broadcast_eval=False (eval suite too big to broadcast) must produce
-    exactly the same contamination pairs as the broadcast path."""
-    ev = docs.limit(5).select(F.col("doc_id").alias("eval_id"), "text")
-    a = {(r["doc_id"], r["eval_id"], r["n_shared"])
-         for r in decontaminate(docs, ev, min_overlap=3).collect()}
-    b = {(r["doc_id"], r["eval_id"], r["n_shared"])
-         for r in decontaminate(
-             docs, ev, min_overlap=3, broadcast_eval=False).collect()}
-    assert a == b and a
-
-
 def test_stratified_sample_exchanges_are_narrow(spark, docs):
     """Scale shape (VERDICT r4 #3): ranking runs on the narrow
     (id, stratum, md5) projection — the fat text column must never enter

@@ -56,14 +56,6 @@ def test_media_decode_deterministic(spark, docs):
     assert all(len(v) == mm.FEATURE_DIM for v in f1["feature"])
 
 
-def test_media_unimplemented_backends_raise(spark, docs):
-    m = mm.synth_media_from_documents(docs)
-    with pytest.raises(NotImplementedError):
-        mm.decode_features(m, backend="pillow")
-    with pytest.raises(ValueError):
-        mm.decode_features(m, backend="nope")
-
-
 def test_frame_sample_plan(spark, docs):
     m = mm.synth_media_from_documents(docs)
     frames = mm.frame_sample_plan(m, every_n=10)
@@ -143,7 +135,7 @@ def test_decode_features_arrow_equals_pandas(spark):
     m = synth_media_from_documents(
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     )
-    a = decode_features(m, backend="fake")
+    a = decode_features(m)
     b = decode_features_arrow(m)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
