@@ -34,30 +34,18 @@ same fixed iterations reproduces every assignment bit-for-bit.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nlnieuwscrawler_spark.operators.similarity import dot, norm
-
-
-def _sqdist(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance to a literal centroid, accumulated
-    left-to-right in DOUBLE (DuckDB list_sum order)."""
-    lit = F.array(*[F.lit(float(c)) for c in centroid])
-    return F.aggregate(
-        F.zip_with(vec, lit, lambda x, y: (x.cast("double") - y)
-                   * (x.cast("double") - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def _assign(df: DataFrame, centroids: list[tuple[int, list[float]]],
             vec_col: str) -> DataFrame:
     """Label every row with its nearest centroid — pure projection.
 
-    BIT-IDENTICAL to the expression form it replaces (kept as
-    :func:`_assign_expr`, pinned by tests/test_clustering.py): the
+    BIT-IDENTICAL to the expression form it replaces (kept as the
+    reference ``_assign_expr`` in tests/test_clustering.py): the
     Catalyst higher-order ``aggregate(zip_with(...))`` fold is evaluated
     interpreted, per element, per centroid, per row — measured 0.75 s for
     2000 rows × 8 centroids × 64 dims at sf0.1, and each k-means
@@ -104,25 +92,6 @@ def _assign(df: DataFrame, centroids: list[tuple[int, list[float]]],
         .withColumn("sqdist", F.col("__best.sqdist"))
         .drop("__best")
     )
-
-
-def _assign_expr(df: DataFrame, centroids: list[tuple[int, list[float]]],
-                 vec_col: str) -> DataFrame:
-    """The original pure-expression assignment (higher-order folds +
-    ``F.least`` struct argmin). Kept as the reference implementation the
-    vectorized :func:`_assign` is pinned against — slow per row, but its
-    semantics are the module contract."""
-    cands = [
-        F.struct(
-            _sqdist(F.col(vec_col), vec).alias("dist"),
-            F.lit(int(cid)).cast("long").alias("cid"),
-        )
-        for cid, vec in centroids
-    ]
-    best = F.least(*cands) if len(cands) > 1 else cands[0]
-    return df.withColumn("__best", best).withColumn(
-        "cluster", F.col("__best.cid")
-    ).withColumn("sqdist", F.col("__best.dist")).drop("__best")
 
 
 def _fit_centroids(

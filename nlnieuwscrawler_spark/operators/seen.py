@@ -10,16 +10,15 @@ false POSITIVES, and a false positive here would silently DROP a URL the
 reference crawls, breaking the exact URL-seen-set equivalence gate. So the
 filter is strictly a pre-filter:
 
-1. probe the filter (vectorized numpy inside a pandas UDF):
+1. probe the filter once (vectorized numpy inside a pandas UDF):
    ``maybe_seen = bloom[positions(fp)] all set``;
-2. rows with ``maybe_seen = false`` are DEFINITELY new (no false
-   negatives) — they skip the expensive path entirely;
-3. rows with ``maybe_seen = true`` (tiny fraction: real dups + ~fpp) get an
-   exact LEFT ANTI join against the persisted ``url_seen`` keys.
+2. one LEFT ANTI join against the persisted ``url_seen`` keys on
+   ``fp = seen_fp AND maybe_seen``: rows with ``maybe_seen = false`` are
+   DEFINITELY new (no false negatives) and the condition keeps them, so
+   the exact check decides only the maybe-seen rows (real dups + ~fpp).
 
-Net effect at scale: the anti-join's left side shrinks from |candidates| to
-|dups| + fpp·|candidates|, so the shuffle is tiny; correctness never
-depends on the filter.
+The join still reads every probed candidate; correctness never depends on
+the filter.
 
 Scale honesty (10^10 URLs): at 12 bits/key that is **~15 GB of bitmap** —
 far over Spark's broadcast ceiling and any sane driver heap. So the
@@ -455,17 +454,23 @@ def filter_unseen(
 ) -> DataFrame:
     """Exact not-seen filter, sketch-accelerated when a filter is supplied.
 
-    Without a filter this degrades to a plain left-anti join (still exact,
-    just a bigger shuffle) — the filter is an optimization, never semantics.
+    With a filter: probe once, then ONE conditional join, ``probed LEFT
+    ANTI JOIN seen ON fp = seen_fp AND maybe_seen``. The filter has no
+    false negatives, so a ``maybe_seen = false`` row is definitely new and
+    the condition keeps it; every maybe-seen row gets the exact check. No
+    fork, so the probe and the plan under it run once.
+
+    Without a filter this degrades to a plain left-anti join (still exact)
+    — the filter is an optimization, never semantics.
     """
     if bloom is None:
         return candidates.join(
             seen_keys.select(F.col(fp_col)), on=fp_col, how="left_anti"
         )
     probed = bloom.probe(candidates, fp_col)
-    definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    rescued = suspects.join(
-        seen_keys.select(F.col(fp_col)), on=fp_col, how="left_anti"
-    )
-    return definite_new.unionByName(rescued)
+    seen_fps = seen_keys.select(F.col(fp_col).alias("__seen_fp"))
+    return probed.join(
+        seen_fps,
+        (F.col(fp_col) == F.col("__seen_fp")) & F.col("maybe_seen"),
+        "left_anti",
+    ).drop("maybe_seen")

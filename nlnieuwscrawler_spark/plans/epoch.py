@@ -284,21 +284,22 @@ def run_epoch(
     )
     new_links = discover_links(ok, epoch)
     attempted_fps = sched.select("url_fp")
-    # persist: new_seen feeds the Bloom build, the seen-keys union AND the
-    # unseen filter — without this each consumer re-runs the rank pipeline
+    # persist: new_seen feeds the Bloom build and the seen-keys union —
+    # without this each consumer re-runs the rank pipeline
     new_seen = attempted_fps.unionByName(denied_fps).persist()
     cached.append(new_seen)
-    # Bloom covers only the PRE-epoch seen set — probe it for the old keys,
-    # then an exact (broadcastable, epoch-sized) anti-join for this epoch's
-    # additions. Never let a Bloom miss skip an exact check it must make.
+    # Bloom covers only the PRE-epoch seen set — probe it for the old keys.
+    # Never let a Bloom miss skip an exact check it must make.
     unseen_old = seen_op.filter_unseen(
         new_links, seen_keys.select("url_fp"), "url_fp", bloom=bloom
     )
-    # no broadcast hint: new_seen is budget-bound (small) in politeness mode
-    # but frontier-sized in recrawl mode — AQE picks broadcast when it fits
-    unseen = unseen_old.join(new_seen, "url_fp", "left_anti")
-    # also drop anything already waiting in the deferred frontier
-    fresh = unseen.join(deferred.select("url_fp"), "url_fp", "left_anti")
+    # This epoch's additions (new_seen) and the deferred rows in ONE exact
+    # anti-join against the epoch's own frontier. robots_filter and
+    # epoch_schedule only drop rows, so
+    #   fps(new_seen) ∪ fps(deferred)
+    #     = fps(denied) ∪ fps(sched) ∪ fps(allowed − sched) = fps(frontier).
+    # No broadcast hint: AQE picks broadcast when the frontier fits.
+    fresh = unseen_old.join(frontier.select("url_fp"), "url_fp", "left_anti")
     next_frontier = deferred.unionByName(fresh.select(FRONTIER_COLS))
 
     return EpochResult(

@@ -23,6 +23,36 @@ def _vec_df(spark, vecs):
     )
 
 
+def _sqdist(vec, centroid):
+    """Squared L2 distance to a literal centroid, accumulated
+    left-to-right in DOUBLE (DuckDB list_sum order)."""
+    lit = F.array(*[F.lit(float(c)) for c in centroid])
+    return F.aggregate(
+        F.zip_with(vec, lit, lambda x, y: (x.cast("double") - y)
+                   * (x.cast("double") - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _assign_expr(df, centroids, vec_col):
+    """The original pure-expression assignment (higher-order folds +
+    ``F.least`` struct argmin): the reference the vectorized
+    ``clustering._assign`` is pinned against — slow per row, but its
+    semantics are the module contract."""
+    cands = [
+        F.struct(
+            _sqdist(F.col(vec_col), vec).alias("dist"),
+            F.lit(int(cid)).cast("long").alias("cid"),
+        )
+        for cid, vec in centroids
+    ]
+    best = F.least(*cands) if len(cands) > 1 else cands[0]
+    return df.withColumn("__best", best).withColumn(
+        "cluster", F.col("__best.cid")
+    ).withColumn("sqdist", F.col("__best.dist")).drop("__best")
+
+
 def _numpy_kmeans(vecs, k, iters):
     """Plain-float reference of the fixed semantics (init = first k ids,
     argmin ties -> smaller cid, empty cluster keeps centroid)."""
@@ -196,7 +226,6 @@ def test_assign_vectorized_is_bit_identical_to_expression_form(spark):
     vector."""
     from nlnieuwscrawler_spark.operators.clustering import (
         _assign,
-        _assign_expr,
         _fit_centroids,
     )
 
@@ -229,10 +258,7 @@ def test_semdedup_two_stage_matches_expression_join_reference(spark):
     must keep the (cluster, keep) output identical to the r5
     all-same-cluster-pairs expression join, including near-threshold
     pairs (vectors planted at cosines straddling the 0.99 cut)."""
-    from nlnieuwscrawler_spark.operators.clustering import (
-        _assign_expr,
-        _fit_centroids,
-    )
+    from nlnieuwscrawler_spark.operators.clustering import _fit_centroids
     from nlnieuwscrawler_spark.operators.similarity import dot, norm
 
     rng = np.random.RandomState(23)
