@@ -8,17 +8,14 @@ broadcast-merged per epoch".
 Design (SURVEY §7.3.1 — the correctness-critical part): a Bloom filter has
 false POSITIVES, and a false positive here would silently DROP a URL the
 reference crawls, breaking the exact URL-seen-set equivalence gate. So the
-filter is strictly a pre-filter:
-
-1. probe the filter once (vectorized numpy inside a pandas UDF):
-   ``maybe_seen = bloom[positions(fp)] all set``;
-2. one LEFT ANTI join against the persisted ``url_seen`` keys on
-   ``fp = seen_fp AND maybe_seen``: rows with ``maybe_seen = false`` are
-   DEFINITELY new (no false negatives) and the condition keeps them, so
-   the exact check decides only the maybe-seen rows (real dups + ~fpp).
-
-The join still reads every probed candidate; correctness never depends on
-the filter.
+exact answer is a LEFT ANTI join of the candidates against the persisted
+``url_seen`` keys (:func:`filter_unseen`), and it does not read the filter.
+The filter has no false negatives, so every candidate whose fp is in the
+seen keys probes maybe-seen: a probe could only let a definitely-new row
+skip a comparison whose answer is already "keep", while the join still
+reads the whole seen side. So the crawl's unseen check does not probe.
+The crawl keeps the filter current per epoch (``add_keys``) and in its
+snapshots; ``remove_keys`` retracts from it.
 
 Scale honesty (10^10 URLs): at 12 bits/key that is **~15 GB of bitmap** —
 far over Spark's broadcast ceiling and any sane driver heap. So the
@@ -450,27 +447,16 @@ def filter_unseen(
     candidates: DataFrame,
     seen_keys: DataFrame,
     fp_col: str = "url_fp",
-    bloom: SeenSet | None = None,
 ) -> DataFrame:
-    """Exact not-seen filter, sketch-accelerated when a filter is supplied.
+    """Exact not-seen filter: ``candidates LEFT ANTI JOIN seen_keys`` on fp.
 
-    With a filter: probe once, then ONE conditional join, ``probed LEFT
-    ANTI JOIN seen ON fp = seen_fp AND maybe_seen``. The filter has no
-    false negatives, so a ``maybe_seen = false`` row is definitely new and
-    the condition keeps it; every maybe-seen row gets the exact check. No
-    fork, so the probe and the plan under it run once.
-
-    Without a filter this degrades to a plain left-anti join (still exact)
-    — the filter is an optimization, never semantics.
+    The join compares every candidate against the seen keys. No filter is
+    probed: a ``maybe_seen`` term on the join could only keep a row whose
+    fp is seen yet probes not-seen, which a filter without false
+    negatives never returns. The term would change nothing, and the probe
+    would add a Python pass over every candidate to a join that runs
+    anyway.
     """
-    if bloom is None:
-        return candidates.join(
-            seen_keys.select(F.col(fp_col)), on=fp_col, how="left_anti"
-        )
-    probed = bloom.probe(candidates, fp_col)
-    seen_fps = seen_keys.select(F.col(fp_col).alias("__seen_fp"))
-    return probed.join(
-        seen_fps,
-        (F.col(fp_col) == F.col("__seen_fp")) & F.col("maybe_seen"),
-        "left_anti",
-    ).drop("maybe_seen")
+    return candidates.join(
+        seen_keys.select(F.col(fp_col)), on=fp_col, how="left_anti"
+    )

@@ -129,7 +129,10 @@ class Crawler:
         # materialize: the seed frontier is consumed by several jobs per
         # epoch; lazy, it would re-canonicalize the seed list in each one
         self.frontier = epoch_plan.seeds_frontier(seeds).localCheckpoint(eager=True)
-        self.seen_keys = self.spark.createDataFrame([], SEEN_SCHEMA)
+        # limit(0) folds to an empty local relation, so epoch 0's unseen
+        # anti-join drops out of the plan; an empty local list alone is an
+        # RDD scan the optimizer cannot see is empty, and the join would run
+        self.seen_keys = self.spark.createDataFrame([], SEEN_SCHEMA).limit(0)
         if self.config.use_bloom:
             self.bloom = self.config._filter_cls().empty(
                 self.spark,
@@ -176,7 +179,6 @@ class Crawler:
             self.robots,
             self.seen_keys,
             epoch=self.epoch,
-            bloom=self.bloom if self.config.use_bloom else None,
             salt=self.config.salt,
             seq_base=self.seq_base,
             epoch_seconds=self.config.epoch_seconds,

@@ -5,7 +5,7 @@ Pipeline per micro-batch (north_star): frontier snapshot → robots filter
 per-host priority rank (windows) → fetch simulation (equi-join against the
 pre-reduced pages index) → extraction (Arrow pandas UDF) → Dutch lang gate
 → link discovery (explode + native canonicalization + Murmur3 fingerprint)
-→ URL-seen filter (Bloom pre-filter + exact anti-join) → frontier merge.
+→ URL-seen filter (exact anti-join) → frontier merge.
 
 Every ordering has the total tie-break (priority DESC, discovered_epoch,
 url_fp) so the crawl order is identical at any parallelism — pinned by the
@@ -127,7 +127,6 @@ def run_epoch(
     robots: DataFrame,
     seen_keys: DataFrame,
     epoch: int,
-    bloom: seen_op.SeenSet | None = None,
     salt: int = 1,
     seq_base: int = 0,
     epoch_seconds: float | None = None,
@@ -288,10 +287,9 @@ def run_epoch(
     # without this each consumer re-runs the rank pipeline
     new_seen = attempted_fps.unionByName(denied_fps).persist()
     cached.append(new_seen)
-    # Bloom covers only the PRE-epoch seen set — probe it for the old keys.
-    # Never let a Bloom miss skip an exact check it must make.
+    # exact check against the PRE-epoch seen set
     unseen_old = seen_op.filter_unseen(
-        new_links, seen_keys.select("url_fp"), "url_fp", bloom=bloom
+        new_links, seen_keys.select("url_fp"), "url_fp"
     )
     # This epoch's additions (new_seen) and the deferred rows in ONE exact
     # anti-join against the epoch's own frontier. robots_filter and

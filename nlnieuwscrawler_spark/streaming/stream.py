@@ -101,7 +101,6 @@ def run_epoch_stream(
     of frontier candidates goes through robots→politeness→fetch→extract and
     appends to an in-memory sink. Demonstrates the batch/streaming parity
     the engine is designed around (same epoch plan object)."""
-    from nlnieuwscrawler_spark.operators import seen as seen_op
     from nlnieuwscrawler_spark.plans import epoch as epoch_plan
 
     state = {"seen": spark.createDataFrame([], "url_fp long"), "epoch": 0, "seq": 0}
@@ -114,7 +113,6 @@ def run_epoch_stream(
             robots,
             state["seen"],
             epoch=state["epoch"],
-            bloom=None,
             seq_base=state["seq"],
         )
         log = res.crawl_log.localCheckpoint(eager=True)

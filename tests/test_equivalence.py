@@ -2,7 +2,7 @@
 
 Same seed list + politeness budget → identical crawl ordering (every column
 of the crawl_log trace) and identical final URL-seen set; and the engine's
-scale machinery (Bloom pre-filter, salted two-phase rank) must be
+scale machinery (Bloom/cuckoo seen filter, salted two-phase rank) must be
 result-invariant — optimizations, never semantics.
 """
 

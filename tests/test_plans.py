@@ -132,6 +132,24 @@ def test_bucketed_join_skips_shuffle(spark, tmp_path_factory):
         spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
+def test_fresh_crawl_unseen_join_folds_away(spark, tiny_pages_df):
+    """A fresh crawl's seen keys are visibly empty to the optimizer, so
+    epoch 0's unseen anti-join leaves no join in the plan."""
+    from nlnieuwscrawler_spark.operators.seen import filter_unseen
+    from nlnieuwscrawler_spark.plans.crawler import Crawler, CrawlConfig
+
+    c = Crawler(
+        spark, tiny_pages_df, fixtures.robots_df(spark), None,
+        CrawlConfig(max_epochs=1, checkpoint=False),
+    )
+    c.start(fixtures.seeds_df(spark))
+    cand = spark.range(10).select(F.xxhash64("id").alias("url_fp"))
+    out = filter_unseen(cand, c.seen_keys, "url_fp")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
+    assert out.count() == 10
+
+
 def test_fetch_index_not_reexchanged(spark, tiny_pages_df):
     """Regression for the round-3 find: with
     requireAllClusterKeysForCoPartition=true (Spark >= 3.3 default), an
@@ -163,7 +181,7 @@ def test_fetch_index_not_reexchanged(spark, tiny_pages_df):
 
         res = epoch_plan.run_epoch(
             c.frontier, c.pages_latest, c.robots, c.seen_keys,
-            epoch=1, bloom=None, seq_base=c.seq_base,
+            epoch=1, seq_base=c.seq_base,
         )
         res.crawl_log.count()
         plan = res.crawl_log._jdf.queryExecution().executedPlan().toString()

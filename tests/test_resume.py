@@ -85,8 +85,8 @@ def test_expire_snapshots_keeps_current_readable(spark, uninterrupted):
 def test_cuckoo_retraction_mid_crawl(spark, tiny_pages_df):
     """remove_keys mid-crawl (the reason the cuckoo variant exists): after
     retracting a subset of crawled URLs from BOTH the cuckoo filter and the
-    exact seen-keys table, filter_unseen re-admits exactly those URLs and
-    the crawl keeps running."""
+    exact seen-keys table, filter_unseen re-admits exactly those URLs, the
+    filter still flags every kept URL, and the crawl keeps running."""
     from pyspark.sql import functions as F
 
     from nlnieuwscrawler_spark.operators.seen import filter_unseen
@@ -108,10 +108,14 @@ def test_cuckoo_retraction_mid_crawl(spark, tiny_pages_df):
     # retraction = delete from the filter AND the exact key table
     c.bloom.remove_keys(retract, "url_fp")
     c.seen_keys = c.seen_keys.join(retract, "url_fp", "left_anti")
-    readmitted = filter_unseen(crawled, c.seen_keys, "url_fp", bloom=c.bloom)
+    readmitted = filter_unseen(crawled, c.seen_keys, "url_fp")
     got = {r["url_fp"] for r in readmitted.collect()}
     want = {r["url_fp"] for r in retract.collect()}
     assert got == want  # exactly the retracted fps pass, nothing else
+    # the deletes cost the filter no false negative on the kept fps
+    kept = crawled.join(retract, "url_fp", "left_anti")
+    lost = c.bloom.probe(kept, "url_fp").filter(~F.col("maybe_seen"))
+    assert lost.count() == 0
     # the crawl continues from the mutated state without error
     if c.frontier.take(1):
         c.step()
