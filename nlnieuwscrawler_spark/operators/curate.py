@@ -34,21 +34,27 @@ Scale shape: each stage keeps its own audited 100 TB plan (narrow
 exchanges, broadcast dims, bucketed candidates — see the per-operator
 docstrings); the composite adds NO new shuffle of the fat ``text`` column
 beyond what the stages themselves need. The cleaned corpus (post-rewrite)
-is persisted ONCE and feeds the Gopher/exact chain; the exact-dedup
-survivors are persisted ONCE and feed both the pair generation and the
-retention join; the decontaminated set is persisted once and feeds
-sampling + the stage-count audit.
+is persisted ONCE, with the per-doc Gopher pass flag computed inside that
+cut, so the quality gate above it is a filter on a stored boolean; the
+exact-dedup survivors are persisted ONCE and feed both the pair generation
+and the retention join; the decontaminated set is persisted once and
+feeds sampling + the stage-count audit.
 
 Per-stage counts: every curation run must report kept/dropped per stage
 (the audit a data team actually reviews before a training run). They are
-computed as ONE union-all aggregation job over the persisted stage
-outputs — a single extra action for the whole audit, never one count()
-per stage. (The Observation API is deliberately NOT used here: the doc
-chain references the corpus subtree more than once — each dedup stage
-joins the corpus against ids derived from the same corpus — and
-CollectMetrics accumulates once per plan instance, double-counting any
-observed node that appears in both subtrees. The crawl path, whose
-metric nodes are single-reference, does use observe(): plans/crawler.py.)
+computed by ONE action, a collect of a union-all of one count per
+distinct stage frame, never one count() per stage. That one action is
+still many Spark jobs: under AQE each union branch's exchanges run as
+their own query-stage jobs. Measured with ``perfbench/run.py --workload
+curate --seed 1 --trace 1`` on 4 cores, one unit ran 67 jobs: 36 inside
+``curate()``, 30 in the stage-count collect and 1 in the workload's
+``noop`` write of ``curated``. (The Observation API is deliberately NOT
+used here: the doc chain references the corpus subtree more than once —
+each dedup stage joins the corpus against ids derived from the same
+corpus — and CollectMetrics accumulates once per plan instance,
+double-counting any observed node that appears in both subtrees. The
+crawl path, whose metric nodes are single-reference, does use observe():
+plans/crawler.py.)
 """
 
 from __future__ import annotations
@@ -260,8 +266,8 @@ def curate(
         cleaned = cleaned.withColumn(
             text_col, pii_scrub(F.col(text_col))["text_clean"]
         )
-    # ONE materialized pass over the cleaned corpus: Gopher, exact dedup
-    # and the audit all read it — unmaterialized, the whole ingest +
+    # ONE materialized pass over the cleaned corpus: the quality gate, exact
+    # dedup and the audit all read it — unmaterialized, the whole ingest +
     # rewrite chain (including boilerplate's corpus-line agg) re-executes
     # per consumer. localCheckpoint (not a bare persist) ON PURPOSE: it
     # also CUTS THE LINEAGE, which the r6 chain needs — url gate + four
@@ -278,18 +284,24 @@ def curate(
     # it, nothing downstream reads it.
     from pyspark import StorageLevel
 
+    from nlnieuwscrawler_spark.functions.text import gopher_struct
     from nlnieuwscrawler_spark.operators.checkpoint import cut_lineage
 
     if url_col is not None:
         cleaned = cleaned.drop(url_col)
+    # -- 7. quality gates: the Gopher flag is computed INSIDE the cut -------
+    # so no plan above the cut re-evaluates the expression (tokenize,
+    # stop-word intersect, distinct ratio): qd has four consumers
+    # (dedup_exact and the exd join, both inside the verify cut, and the
+    # audit's quality and exact legs), and each reads the stored boolean.
     cleaned = cut_lineage(
-        cleaned, reliable, storage_level=StorageLevel.DISK_ONLY
+        cleaned.withColumn(
+            "__gopher", gopher_struct(F.col(text_col))["passes"]
+        ),
+        reliable,
+        storage_level=StorageLevel.DISK_ONLY,
     )
-
-    # -- 7. quality gates (zero-shuffle filter over the cached corpus) ------
-    from nlnieuwscrawler_spark.functions.text import gopher_struct
-
-    qd = cleaned.filter(gopher_struct(F.col(text_col))["passes"])
+    qd = cleaned.filter(F.col("__gopher")).drop("__gopher")
 
     # -- 8. exact dedup (keep the min-id representative) --------------------
     reps = dedup_exact(qd, text_col=text_col, id_col=id_col).select(
@@ -400,22 +412,22 @@ def curate(
         n_buckets=pack_buckets,
     )
 
-    # -- stage audit: ONE union-all aggregation job --------------------------
+    # -- stage audit: one union-all over the stage frames -------------------
     # The four rewrite rows all count the PERSISTED cleaned frame:
     # line_rules is the only dropper among them, and the later rewrites
     # are 1:1, so count(cleaned) equals every one of the four stage
-    # outputs that are actually enabled. Identical frames are counted
-    # ONCE (legs grouped by plan object, one agg fanned out to its stage
-    # rows via explode) — r7, closes the ADVICE r6 note: the r6 audit
-    # ran four separate count legs over the cleaned corpus and
-    # re-executed the UNCACHED ingest ancestors (raw scan → URL gate →
-    # md5 anti-join) for the url_gate/incremental rows; those legs are
-    # now shallow zero-shuffle projections of the raw scan (no joins to
-    # replay), and the duplicate cleaned legs collapsed into one.
+    # outputs that are actually enabled. By the same argument, with
+    # line_rules off the incremental row counts cleaned too, so the audit
+    # does not re-run the md5 anti-join. The quality and exact legs read
+    # the Gopher flag stored in the cut. Identical frames are counted ONCE
+    # (legs grouped by plan object, one agg fanned out to its stage rows
+    # via explode). One action, but not one job: each branch's exchanges
+    # run as their own AQE query-stage jobs (30 in the perfbench curate
+    # unit, see the module docstring).
     stage_dfs = [
         docs,
         urld,
-        incd,
+        incd if line_rules else cleaned,
         cleaned,
         cleaned,
         cleaned,

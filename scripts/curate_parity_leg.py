@@ -37,8 +37,7 @@ def main() -> None:
     from nlnieuwscrawler_spark.operators.curate import curate
     from nlnieuwscrawler_spark.session import get_spark
 
-    spark = get_spark("curate-parity", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("curate-parity")
     docs = gen_docs(spark, n_docs).withColumn("lang", F.lit("nl"))
     docs.persist().count()
 

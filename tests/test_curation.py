@@ -170,6 +170,13 @@ def test_curate_composite_stage_audit(spark):
     # packing assigned every curated doc exactly once
     packed_ids = [r["doc_id"] for r in res.packed.collect()]
     assert sorted(packed_ids) == sorted(kept)
+    # the Gopher gate is evaluated once, inside the cleaned-corpus cut: the
+    # exact-dedup survivors (both of qd's consumers) read the stored flag
+    # from the checkpoint scan and evaluate no Gopher expression above it
+    plan = res.cached[0]._jdf.queryExecution().optimizedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "Scan ExistingRDD" in ln]
+    assert scans and all("__gopher" in ln for ln in scans), plan
+    assert "array_intersect" not in plan, plan
     res.unpersist()
 
 
