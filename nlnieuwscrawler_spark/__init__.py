@@ -7,9 +7,9 @@ empty this session — see SURVEY.md §0), re-expressed over DataFrames:
 
 - URL canonicalization + MurmurHash3 fingerprinting as native Catalyst
   expressions (no UDF) — :mod:`nlnieuwscrawler_spark.functions.urls`
-- partitioned Bloom/cuckoo URL-seen set (DataFrame-backed, executor-side
-  build/merge/probe, deletable cuckoo variant) with exact anti-join
-  confirm — :mod:`nlnieuwscrawler_spark.operators.seen`
+- partitioned Bloom URL-seen set (DataFrame-backed, executor-side
+  build/merge/probe) with exact anti-join confirm —
+  :mod:`nlnieuwscrawler_spark.operators.seen`
 - robots.txt first-match semantics via higher-order array functions —
   :mod:`nlnieuwscrawler_spark.operators.robots`
 - per-host politeness budgets + priority ranking via windows —

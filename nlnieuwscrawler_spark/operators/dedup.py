@@ -426,11 +426,13 @@ def dedup_incremental(
     them — ``seen_hashes`` is the persisted (e.g. SnapshotStore-committed)
     hash table of everything already kept. One md5 projection + one
     anti-join keyed on the 16-byte hash; at 10^10 docs the hash table is
-    ~300 GB — a plain shuffled anti-join (never broadcast), or front it
-    with the partitioned Bloom seen-filter (operators/seen.py) exactly as
-    the crawl frontier does for URLs. Within-batch duplicates are NOT
-    collapsed here (that's :func:`dedup_exact`'s job) — the two compose:
-    dedup_exact first, then incremental against history.
+    ~300 GB — a plain shuffled anti-join (never broadcast). A Bloom filter
+    in front would not shrink it: with no false negatives every seen hash
+    is still compared, which is why the crawl's URL check
+    (operators/seen.filter_unseen) is the same plain anti-join.
+    Within-batch duplicates are NOT collapsed here (that's
+    :func:`dedup_exact`'s job) — the two compose: dedup_exact first, then
+    incremental against history.
     """
     hashed = new_docs.withColumn(hash_col, F.md5(F.col(text_col)))
     return hashed.join(

@@ -6,8 +6,14 @@ a serial sort that caps scaling (Amdahl) once epochs carry 10^5+ rows.
 
 1. ``repartitionByRange`` on the order key (parallel range shuffle) +
    ``sortWithinPartitions`` — globally sorted across ordered partitions;
-2. one cheap job counts rows per partition;
-3. ``mapInPandas`` enumerates each partition with its broadcast offset.
+2. one cheap job counts rows per partition; the exclusive scan of those
+   counts is each partition's offset (driver-side over ~num_partitions
+   values — metadata, not data);
+3. ``mapInPandas`` enumerates each partition from its broadcast offset.
+
+A sequence number is ``base`` plus a running count, so
+:func:`global_running_sum` is the same scan (:func:`_range_scan`) with
+each row weighing its value instead of 1.
 
 The result is ``localCheckpoint``-materialized before returning: range
 boundaries come from RangePartitioner SAMPLING, so any re-planning that
@@ -28,6 +34,69 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _range_scan(
+    df: DataFrame,
+    order_cols: list,
+    out_col: str,
+    weight: str | None,
+    base: int,
+    num_partitions: int | None,
+    reliable: bool,
+) -> DataFrame:
+    """Add ``out_col`` = ``base`` + the inclusive running total, in
+    ``order_cols`` order, of each row's weight: the integral value of
+    column ``weight``, or 1 per row when ``weight`` is None.
+
+    Range-partition + local sort (persisted), one per-partition total
+    collect, exclusive-scan offsets, broadcast, a ``mapInPandas`` cumsum
+    fill, then the lineage cut (module docstring) before the ranged
+    frame is released.
+    """
+    spark = df.sparkSession
+    n_parts = num_partitions or spark.sparkContext.defaultParallelism * 2
+    ranged = (
+        df.repartitionByRange(n_parts, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    total = F.count("*") if weight is None else F.sum(F.col(weight).cast("long"))
+    totals = {
+        r["pid"]: r["tot"] or 0
+        for r in ranged.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(total.alias("tot"))
+        .collect()
+    }
+    offsets = {}
+    acc = base
+    for pid in sorted(totals):
+        offsets[pid] = acc
+        acc += totals[pid]
+    bc = spark.sparkContext.broadcast(offsets)
+
+    out_schema = T.StructType(
+        df.schema.fields + [T.StructField(out_col, T.LongType(), False)]
+    )
+
+    def fill_partition(batches):
+        pos = bc.value.get(TaskContext.get().partitionId(), 0)
+        for pdf in batches:
+            steps = (
+                np.ones(len(pdf), dtype=np.int64) if weight is None
+                else pdf[weight].to_numpy(dtype=np.int64)
+            )
+            run = pos + np.cumsum(steps)
+            pdf = pdf.copy()
+            pdf[out_col] = run
+            pos = int(run[-1]) if len(run) else pos
+            yield pdf
+
+    from nlnieuwscrawler_spark.operators.checkpoint import cut_lineage
+
+    out = cut_lineage(ranged.mapInPandas(fill_partition, out_schema), reliable)
+    ranged.unpersist()
+    return out
+
+
 def global_sequence(
     df: DataFrame,
     order_cols: list,
@@ -45,46 +114,7 @@ def global_sequence(
     SparkContext checkpoint dir instead of ``localCheckpoint`` — the
     executor-loss-safe mode for long cluster runs (operators/checkpoint).
     """
-    spark = df.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism * 2
-    ranged = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    counts = {
-        r["pid"]: r["n"]
-        for r in ranged.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    offsets = {}
-    acc = base
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    bc = spark.sparkContext.broadcast(offsets)
-
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField(seq_col, T.LongType(), False)]
-    )
-
-    def enumerate_partition(batches):
-        pid = TaskContext.get().partitionId()
-        pos = bc.value.get(pid, 0)
-        for pdf in batches:
-            n = len(pdf)
-            pdf = pdf.copy()
-            pdf[seq_col] = np.arange(pos + 1, pos + 1 + n, dtype=np.int64)
-            pos += n
-            yield pdf
-
-    from nlnieuwscrawler_spark.operators.checkpoint import cut_lineage
-
-    out = cut_lineage(
-        ranged.mapInPandas(enumerate_partition, out_schema), reliable
-    )
-    ranged.unpersist()
+    out = _range_scan(df, order_cols, seq_col, None, base, num_partitions, reliable)
     if cache_registry is not None:
         cache_registry.append(out)
     return out
@@ -102,14 +132,11 @@ def global_running_sum(
     ``order_cols`` order — the parallel form of
     ``SUM(v) OVER (ORDER BY ...)``, which Spark executes as ONE task.
 
-    Same two-phase recipe as :func:`global_sequence` (this module's
-    docstring): range-partition + local sort, one cheap job aggregates
-    the per-partition SUM of ``value_col``, partition offsets are the
-    exclusive scan of those totals (driver-side over ~num_partitions
-    values — metadata, not data), and a ``mapInPandas`` pass adds each
-    partition's numpy cumsum to its broadcast offset. Values must be
-    integral (LongType result — exact, associative, partition-order
-    free; float prefix sums would depend on partition boundaries).
+    Same scan as :func:`global_sequence` (this module's docstring), with
+    the per-partition SUM of ``value_col`` as each partition's total and
+    a numpy cumsum of the values as the fill. Values must be integral
+    (LongType result — exact, associative, partition-order free; float
+    prefix sums would depend on partition boundaries).
 
     The workhorse of token-budget sharding (:func:`~nlnieuwscrawler_spark.
     operators.sampling.shard_pack`): at 10^10 docs the prefix sum is the
@@ -126,48 +153,7 @@ def global_running_sum(
     frame's lineage before the totals job) so the ranged layout is a
     fact, not a recipe.
     """
-    spark = df.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism * 2
-    ranged = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    totals = {
-        r["pid"]: r["tot"]
-        for r in ranged.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.sum(F.col(value_col).cast("long")).alias("tot"))
-        .collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += totals[pid] or 0
-    bc = spark.sparkContext.broadcast(offsets)
-
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField(sum_col, T.LongType(), False)]
-    )
-    vcol = value_col
-
-    def scan_partition(batches):
-        pid = TaskContext.get().partitionId()
-        base = bc.value.get(pid, 0)
-        for pdf in batches:
-            pdf = pdf.copy()
-            c = np.cumsum(pdf[vcol].to_numpy(dtype=np.int64))
-            pdf[sum_col] = base + c
-            base += int(c[-1]) if len(c) else 0
-            yield pdf
-
-    from nlnieuwscrawler_spark.operators.checkpoint import cut_lineage
-
-    out = cut_lineage(
-        ranged.mapInPandas(scan_partition, out_schema), reliable
-    )
-    ranged.unpersist()
-    return out
+    return _range_scan(df, order_cols, sum_col, value_col, 0, num_partitions, reliable)
 
 
 def ntile_from_rank(rank_col: str, total_col: str, k: int) -> F.Column:

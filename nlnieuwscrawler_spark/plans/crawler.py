@@ -28,7 +28,6 @@ from nlnieuwscrawler_spark.plans import epoch as epoch_plan
 from nlnieuwscrawler_spark.sources.tableio import SnapshotStore
 
 SEEN_SCHEMA = "url_fp long"
-BLOOM_SCHEMA = "partition_id int, bloom binary, n_items long, n_bits long, n_hashes int"
 # run_epoch's crawl_log columns: the log of a crawl that ran no epoch
 CRAWL_LOG_SCHEMA = (
     "epoch int, seq long, url string, url_fp long, host string, depth int, "
@@ -44,14 +43,9 @@ class CrawlConfig:
     bloom_partitions: int = 32
     bloom_expected_keys: int = 1 << 20
     use_bloom: bool = True
-    seen_filter_kind: str = "bloom"  # "bloom" | "cuckoo" (deletable)
     checkpoint: bool = True
     epoch_seconds: float | None = None  # None → spec.EPOCH_SECONDS (30s)
     distributed_trace: bool = False  # distributed seq (recrawl-scale epochs)
-
-    def _filter_cls(self):
-        return (seen_op.CuckooSeenSet if self.seen_filter_kind == "cuckoo"
-                else seen_op.BloomSeenSet)
 
 
 class Crawler:
@@ -120,7 +114,7 @@ class Crawler:
         self.seq_base = 0
         self.frontier: DataFrame | None = None
         self.seen_keys: DataFrame | None = None
-        self.bloom: seen_op.SeenSet | None = None
+        self.bloom: seen_op.BloomSeenSet | None = None
         self.crawl_log_parts: list[DataFrame] = []
         self.metrics_rows: list[dict] = []
 
@@ -134,7 +128,7 @@ class Crawler:
         # RDD scan the optimizer cannot see is empty, and the join would run
         self.seen_keys = self.spark.createDataFrame([], SEEN_SCHEMA).limit(0)
         if self.config.use_bloom:
-            self.bloom = self.config._filter_cls().empty(
+            self.bloom = seen_op.BloomSeenSet.empty(
                 self.spark,
                 self.config.bloom_partitions,
                 self.config.bloom_expected_keys,
@@ -165,7 +159,7 @@ class Crawler:
         self.seen_keys = self.store.read_table(self.spark, "seen_keys")
         if self.config.use_bloom:
             # partition rows stay distributed — resume never collects bitmaps
-            self.bloom = self.config._filter_cls().from_df(
+            self.bloom = seen_op.BloomSeenSet.from_df(
                 self.store.read_table(self.spark, "bloom"),
                 self.config.bloom_partitions,
             )
@@ -211,7 +205,7 @@ class Crawler:
         if self.store is not None and self.config.checkpoint:
             bloom_df = (
                 self.bloom.to_df() if self.config.use_bloom
-                else self.spark.createDataFrame([], BLOOM_SCHEMA)
+                else self.spark.createDataFrame([], seen_op.FILTER_SCHEMA)
             )
             version = self.store.commit(
                 self.spark,

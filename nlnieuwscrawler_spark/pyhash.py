@@ -94,22 +94,3 @@ def bloom_positions(fps: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
     i = np.arange(n_hashes, dtype=np.uint64)
     pos = (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(n_bits)
     return pos
-
-
-def cuckoo_index_tag(
-    fps: np.ndarray, n_buckets: int, tag_bits: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Partial-key cuckoo hashing: (bucket index, nonzero tag) per key.
-
-    Index from the hash's low bits, tag from its high bits (independent
-    enough after splitmix64's avalanche); tag 0 is reserved as the
-    empty-slot marker, so 0 maps to 1. The alternate bucket is
-    ``i2 = i1 XOR index(tag)`` — an involution when n_buckets is a power
-    of two, which :class:`~...operators.seen.CuckooSeenSet` guarantees.
-    """
-    u = fps.astype(np.int64).view(np.uint64)
-    h = _splitmix64(u)
-    idx = (h % np.uint64(n_buckets)).astype(np.int64)
-    tag = ((h >> np.uint64(40)) & np.uint64((1 << tag_bits) - 1)).astype(np.uint16)
-    tag = np.where(tag == 0, np.uint16(1), tag).astype(np.uint16)
-    return idx, tag

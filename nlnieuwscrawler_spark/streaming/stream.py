@@ -9,7 +9,8 @@ is direct:
   budget gate as an arbitrary-stateful operator (GroupState), the streaming
   twin of operators/politeness.py
 - ``run_epoch_stream`` — foreachBatch driver running the batch epoch plan
-  per micro-batch with exactly-once snapshot commits (Trigger.AvailableNow)
+  per micro-batch (Trigger.AvailableNow); it returns the union of the
+  batches' crawl logs and commits no snapshot
 
 All tested against their batch twins in tests/test_streaming_media.py via
 the memory sink + ``processAllAvailable`` (the public local-smoke pattern).
@@ -98,9 +99,12 @@ def run_epoch_stream(
     robots: DataFrame,
 ):
     """Drive the batch epoch plan per micro-batch (foreachBatch): each batch
-    of frontier candidates goes through robots→politeness→fetch→extract and
-    appends to an in-memory sink. Demonstrates the batch/streaming parity
-    the engine is designed around (same epoch plan object)."""
+    of frontier candidates goes through robots→politeness→fetch→extract,
+    and its crawl log (localCheckpoint-ed) is appended to a Python list;
+    returns the union of those logs (None if no batch ran). Nothing is committed to a
+    snapshot store and the query has no stream checkpoint, so a restart
+    starts over. Demonstrates the batch/streaming parity the engine is
+    designed around (same epoch plan object)."""
     from nlnieuwscrawler_spark.plans import epoch as epoch_plan
 
     state = {"seen": spark.createDataFrame([], "url_fp long"), "epoch": 0, "seq": 0}

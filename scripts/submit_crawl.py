@@ -47,7 +47,6 @@ def main() -> None:
     ap.add_argument("--store", required=True, help="SnapshotStore root")
     ap.add_argument("--epochs", type=int, default=10)
     ap.add_argument("--salt", type=int, default=32)
-    ap.add_argument("--seen", choices=["bloom", "cuckoo"], default="bloom")
     ap.add_argument("--resume", action="store_true",
                     help="resume from the store instead of seeding")
     args = ap.parse_args()
@@ -66,7 +65,6 @@ def main() -> None:
         CrawlConfig(
             max_epochs=args.epochs,
             salt=args.salt,
-            seen_filter_kind=args.seen,
             checkpoint=True,
             distributed_trace=True,
         ),

@@ -14,11 +14,10 @@ N_EPOCHS = 4
 KILL_AFTER = 2
 
 
-def _cfg(kind: str = "bloom"):
+def _cfg():
     return CrawlConfig(
         max_epochs=N_EPOCHS,
         use_bloom=True,
-        seen_filter_kind=kind,
         bloom_partitions=8,
         bloom_expected_keys=1 << 14,
         checkpoint=True,
@@ -43,17 +42,17 @@ def uninterrupted(spark, tiny_pages_df, tmp_path_factory):
     return c
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("kind", ["bloom"])  # the filter the resume reloads
 def test_kill_and_resume_identical(
     spark, tiny_pages_df, tmp_path_factory, uninterrupted, kind
 ):
     store = SnapshotStore(str(tmp_path_factory.mktemp(f"snap_kill_{kind}")))
-    c1 = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), store, _cfg(kind))
+    c1 = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), store, _cfg())
     c1.start(fixtures.seeds_df(spark))
     for _ in range(KILL_AFTER):
         c1.step()
     # "crash": abandon c1 entirely; a NEW crawler resumes from the store
-    c2 = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), store, _cfg(kind))
+    c2 = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), store, _cfg())
     c2.resume()
     assert c2.epoch == KILL_AFTER
     for _ in range(N_EPOCHS - KILL_AFTER):
@@ -80,46 +79,6 @@ def test_expire_snapshots_keeps_current_readable(spark, uninterrupted):
     cur = store.current_version()
     assert store.read_table(spark, "frontier", cur).count() >= 0
     assert store.read_table(spark, "seen_keys", cur).count() > 0
-
-
-def test_cuckoo_retraction_mid_crawl(spark, tiny_pages_df):
-    """remove_keys mid-crawl (the reason the cuckoo variant exists): after
-    retracting a subset of crawled URLs from BOTH the cuckoo filter and the
-    exact seen-keys table, filter_unseen re-admits exactly those URLs, the
-    filter still flags every kept URL, and the crawl keeps running."""
-    from pyspark.sql import functions as F
-
-    from nlnieuwscrawler_spark.operators.seen import filter_unseen
-
-    cfg = CrawlConfig(
-        max_epochs=2, use_bloom=True, seen_filter_kind="cuckoo",
-        bloom_partitions=8, bloom_expected_keys=1 << 14, checkpoint=False,
-    )
-    c = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), None, cfg)
-    c.run(seeds=fixtures.seeds_df(spark))
-    crawled = (
-        c.crawl_log().select("url_fp").distinct()
-        .orderBy("url_fp")
-        .localCheckpoint(eager=True)
-    )
-    n_crawled = crawled.count()
-    assert n_crawled > 20
-    retract = crawled.limit(10).localCheckpoint(eager=True)
-    # retraction = delete from the filter AND the exact key table
-    c.bloom.remove_keys(retract, "url_fp")
-    c.seen_keys = c.seen_keys.join(retract, "url_fp", "left_anti")
-    readmitted = filter_unseen(crawled, c.seen_keys, "url_fp")
-    got = {r["url_fp"] for r in readmitted.collect()}
-    want = {r["url_fp"] for r in retract.collect()}
-    assert got == want  # exactly the retracted fps pass, nothing else
-    # the deletes cost the filter no false negative on the kept fps
-    kept = crawled.join(retract, "url_fp", "left_anti")
-    lost = c.bloom.probe(kept, "url_fp").filter(~F.col("maybe_seen"))
-    assert lost.count() == 0
-    # the crawl continues from the mutated state without error
-    if c.frontier.take(1):
-        c.step()
-        assert c.epoch == 3
 
 
 def test_resume_refuses_fingerprint_spec_mismatch(
