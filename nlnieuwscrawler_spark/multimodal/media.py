@@ -172,46 +172,3 @@ def media_resize(
         run, RESIZE_SCHEMA_DDL
     )
 
-
-def decode_features_arrow(media: DataFrame) -> DataFrame:
-    """Arrow-native twin of :func:`decode_features` via ``mapInArrow``:
-    consumes/produces ``pyarrow.RecordBatch`` directly — no pandas
-    materialization between the JVM and the decoder, which matters when
-    payload batches are hundreds of MB (pandas would copy each binary cell
-    into Python objects; Arrow keeps them in the batch buffers until the
-    numpy view). Output is row-identical to the pandas form (pinned by
-    test) — the fake decoder is the same pure function of the bytes.
-    """
-    import pyarrow as pa
-
-    # mapInArrow does NO type coercion: the emitted batch types must equal
-    # the declared schema exactly (a list<double> where array<float> is
-    # declared fails at read time with an accessor error)
-    out_schema = pa.schema(
-        [
-            ("media_id", pa.int64()),
-            ("kind", pa.string()),
-            ("n_bytes", pa.int64()),
-            ("feature", pa.list_(pa.float32())),
-        ]
-    )
-
-    def run(batches):
-        for batch in batches:
-            tbl = batch.to_pydict()
-            payloads = pd.Series(tbl["payload"])
-            feats = _fake_decode_features(payloads)  # (n, FEATURE_DIM) f32
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(tbl["media_id"], pa.int64()),
-                    pa.array(tbl["kind"], pa.string()),
-                    pa.array(
-                        [len(b) if b is not None else 0 for b in tbl["payload"]],
-                        pa.int64(),
-                    ),
-                    pa.array(list(feats), pa.list_(pa.float32())),
-                ],
-                schema=out_schema,
-            )
-
-    return media.mapInArrow(run, FEATURES_SCHEMA_DDL)

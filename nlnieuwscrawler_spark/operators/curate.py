@@ -321,9 +321,6 @@ def curate(
             threshold=near_dup_threshold,
             block_col=near_dup_block,
             max_bucket=near_dup_max_bucket,
-            # exd is a persisted post-shuffle frame — skip the df.rdd
-            # partition probe (see decontaminate's spread note)
-            spread=False,
         )
     elif near_dup == "jaccard":
         pairs = ngram_jaccard_pairs(
@@ -332,7 +329,6 @@ def curate(
             id_col=id_col,
             block_col=near_dup_block,
             threshold=near_dup_threshold,
-            spread=False,
         )
     else:
         pairs = None
@@ -384,9 +380,6 @@ def curate(
                 id_col=id_col,
                 eval_text_col=text_col,
                 min_overlap=decon_min_overlap,
-                # the corpus here is a persisted post-shuffle frame; the
-                # _spread partition probe would re-plan the whole chain
-                spread=False,
             )
             .select(id_col)
             .distinct()

@@ -81,11 +81,23 @@ def _spread(df: DataFrame) -> DataFrame:
     Spread the narrow projection across default parallelism first — the
     shuffle moves only (id, block, text), never derived arrays.
 
-    Only widens, never shrinks: an input already partitioned wider than
-    the core count (the normal case on a real cluster reading a 100 TB
-    table) passes through untouched — repartitioning it DOWN to
-    defaultParallelism would force a full shuffle of the fat text column
-    and throw away parallelism."""
+    One rule, decided from the input plan:
+
+    - a plan that reads no files (``df.inputFiles()`` is empty: a
+      checkpoint, a cached frame, a range) comes back as is. Its
+      partitioning was set by the shuffle or cut that made it, not by a
+      file split, and ``inputFiles()`` only walks the logical plan.
+      ``df.rdd.getNumPartitions()`` would have to plan the whole
+      physical chain, and under AQE that RUNS the input's shuffle
+      stages (curate's MinHash input, 4 cores: 455 ms and 3 jobs).
+    - a plan that reads files widens to ``defaultParallelism`` only when
+      its scan has fewer partitions. It never shrinks: an input already
+      partitioned wider than the core count (the normal case on a real
+      cluster reading a 100 TB table) passes through untouched —
+      repartitioning it DOWN would force a full shuffle of the fat text
+      column and throw away parallelism."""
+    if not df.inputFiles():
+        return df
     want = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= want:
         return df
@@ -111,7 +123,6 @@ def _df_ordered_grams(
     block_col: str | None,
     n: int,
     threshold: float,
-    spread: bool,
 ) -> tuple[DataFrame, DataFrame, Column]:
     """The prefix-filtering gram table shared by the exact pair generators.
 
@@ -131,16 +142,11 @@ def _df_ordered_grams(
     # explode (the pipeline's CPU hot spot) runs twice COLD (the r4 CSE fix
     # only helped warm runs; the driver bench is cold-first-run). The rows
     # are the narrow (id, blk, tok) projection — spillable, never the text.
-    # ``spread=False``: skip the partition-count probe (``df.rdd`` fully
-    # plans the input) when the caller KNOWS the corpus is already
-    # adequately partitioned — curate()'s persisted post-shuffle frame.
-    src = df.select(
+    src = _spread(df.select(
         F.col(id_col).alias("id"),
         (F.col(block_col) if block_col else F.lit("all")).alias("blk"),
         F.col(text_col),
-    )
-    if spread:
-        src = _spread(src)
+    ))
     ex = src.select(
         "id",
         "blk",
@@ -216,7 +222,6 @@ def ngram_jaccard_pairs(
     block_col: str | None = "lang",
     n: int = 3,
     threshold: float = 0.5,
-    spread: bool = True,
 ) -> DataFrame:
     """All (a < b) pairs with n-gram Jaccard ≥ threshold, within a block.
 
@@ -246,7 +251,7 @@ def ngram_jaccard_pairs(
     if threshold <= 0:
         raise ValueError("prefix filtering requires threshold > 0")
     ex, g, prefix_len = _df_ordered_grams(
-        df, text_col, id_col, block_col, n, threshold, spread
+        df, text_col, id_col, block_col, n, threshold
     )
     pref = g.select(
         "id", "blk", F.size("grams").alias("sz"),
@@ -308,7 +313,7 @@ def containment_pairs(
     if threshold <= 0:
         raise ValueError("prefix filtering requires threshold > 0")
     ex, g, prefix_len = _df_ordered_grams(
-        df, text_col, id_col, block_col, n, threshold, True
+        df, text_col, id_col, block_col, n, threshold
     )
     contained = g.select(
         F.col("id").alias("doc_b"), "blk", F.size("grams").alias("sz_b"),
@@ -453,7 +458,6 @@ def decontaminate(
     eval_text_col: str = "text",
     n: int = 3,
     min_overlap: int = 8,
-    spread: bool = True,
 ) -> DataFrame:
     """Flag corpus docs sharing ≥ ``min_overlap`` distinct word n-grams
     with ANY single eval/benchmark doc → (doc_id, eval_id, n_shared).
@@ -473,13 +477,7 @@ def decontaminate(
     per-doc distinct, so ``count(*)`` per (doc, eval) pair IS the number
     of distinct shared grams.
     """
-    # ``spread=False``: skip the partition-count probe (``df.rdd`` must
-    # fully plan the input — ~1.3 s on a deep composite chain) when the
-    # caller KNOWS the corpus is already adequately partitioned, e.g.
-    # curate()'s persisted post-shuffle frame (r7).
-    corpus = docs.select(id_col, text_col)
-    if spread:
-        corpus = _spread(corpus)
+    corpus = _spread(docs.select(id_col, text_col))
     corpus_grams = corpus.select(
         id_col, F.explode(word_ngrams(F.col(text_col), n)).alias("__g")
     )
@@ -645,7 +643,6 @@ def minhash_lsh_pairs(
     block_col: str | None = None,
     max_bucket: int | None = None,
     stats: dict | None = None,
-    spread: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding, verified with exact Jaccard.
 
@@ -686,13 +683,8 @@ def minhash_lsh_pairs(
         base.append(F.col(block_col).alias("__blk"))
     blk = ["__blk"] if block_col is not None else []
     gram_cols = ["id", word_ngrams(F.col(text_col), n).alias("grams")] + blk
-    src = df.select(*base)
-    if spread:
-        # see _df_ordered_grams: skip the df.rdd partition probe when
-        # the caller knows the input is already well-partitioned
-        src = _spread(src)
     g = (
-        src
+        _spread(df.select(*base))
         .select(*gram_cols)
         # docs with no n-grams (< n tokens) can never be near-dups of
         # anything (Jaccard 0 by convention); dropping them here also keeps

@@ -31,7 +31,6 @@ def host_pagerank(
     damping: float = 0.85,
     iters: int = 5,
     reliable: bool = False,
-    stats: dict | None = None,
     seeds: list[int] | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a host link graph → (host, rank).
@@ -108,8 +107,6 @@ def host_pagerank(
     for _ in range(iters):
         new = _pagerank_step(e, outd, nodes, ranks, n_nodes, damping, seeds)
         ranks = cut_lineage(new, reliable, eager=False)
-    if stats is not None:
-        stats["rounds"] = iters
     return ranks
 
 
@@ -182,7 +179,6 @@ def trustrank(
     damping: float = 0.85,
     iters: int = 5,
     reliable: bool = False,
-    stats: dict | None = None,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen 2004) → (host,
     rank): PageRank with the teleport vector personalized to a curated
@@ -203,7 +199,6 @@ def trustrank(
         damping=damping,
         iters=iters,
         reliable=reliable,
-        stats=stats,
         seeds=seeds,
     )
 

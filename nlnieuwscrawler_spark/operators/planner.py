@@ -59,7 +59,6 @@ def plan_crawl(
     damping: float = 0.85,
     obs_key: str = "host",
     q_col: str = "qscore",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Per-host fetch quotas for the next epoch.
 
@@ -70,9 +69,7 @@ def plan_crawl(
     rate 0, absent from ``quality`` get 0.5. Returns (host, rank,
     change_rate, qscore, weight, quota) with sum(quota) == budget.
     """
-    pr = host_pagerank(
-        edges, n_nodes=n_hosts, damping=damping, iters=iters, stats=stats
-    )
+    pr = host_pagerank(edges, n_nodes=n_hosts, damping=damping, iters=iters)
     rr = recrawl_schedule(obs, key_col=obs_key).select(
         F.col(obs_key).alias("host"), "change_rate"
     )

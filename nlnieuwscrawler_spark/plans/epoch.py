@@ -132,8 +132,10 @@ def run_epoch(
     epoch_seconds: float | None = None,
     distributed_trace: bool = False,
 ) -> EpochResult:
-    """One micro-batch. ``pages_latest`` must be one row per url (pre-reduced
-    by operators.asof.latest_snapshot — do it once per crawl, not per epoch).
+    """One micro-batch. ``pages_latest`` must be one row per url with its
+    ``url_fp`` column (pre-reduced by
+    operators.asof.latest_snapshot_clustered, as ``Crawler`` builds it —
+    do it once per crawl, not per epoch).
     """
     # O7 robots: denied URLs leave the frontier and join the seen set (pinned
     # spec: a denied URL is never fetched and never reconsidered).
@@ -170,12 +172,7 @@ def run_epoch(
     # collisions: the index is fp-unique, so each scheduled URL joins at
     # most one candidate page; the url-equality guard downgrades a
     # cross-set collision to status=miss instead of extracting a wrong
-    # page. Uncurated callers (streaming parity) may pass a plain
-    # url-keyed index — derive the fp column for them.
-    if "url_fp" not in pages_latest.columns:
-        pages_latest = pages_latest.withColumn(
-            "url_fp", U.url_fingerprint(F.col("url"))
-        )
+    # page.
     with_url = sched.join(allowed.select("url_fp", "url"), "url_fp", "inner")
     joined = with_url.join(
         pages_latest.select(

@@ -5,6 +5,7 @@ appendix — the sf0.1 registry fixtures are 5k docs; this runs the same
 operators at 100-1000x that.
 
 Usage: python scripts/curation_scale_bench.py [n_docs] [cores]
+``cores`` defaults to get_spark's (``SPARK_GRAFT_CPUS``, else every core).
 """
 
 from __future__ import annotations
@@ -68,7 +69,7 @@ def gen_docs(spark, n_docs: int):
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 32
+    cores = int(sys.argv[2]) if len(sys.argv) > 2 else None
 
     from pyspark.sql import functions as F
 
@@ -92,9 +93,10 @@ def main() -> None:
 
     spark = get_spark(
         "nlnc-curation-scale",
-        master=f"local[{cores}]",
-        shuffle_partitions=2 * cores,
+        master=f"local[{cores}]" if cores else None,
+        shuffle_partitions=2 * cores if cores else None,
     )
+    cores = spark.sparkContext.defaultParallelism
     path = f"/tmp/nlnc_curation_docs_{n_docs}"
     # _SUCCESS marker, not bare existence: a killed prior write leaves a
     # partial directory that bare os.path.exists would silently reuse
@@ -292,13 +294,12 @@ def main() -> None:
         )
     ).filter(F.col("src") != F.col("dst"))
     if _want("host_pagerank"):
-        pr_stats: dict = {}
         t0 = time.perf_counter()
-        pr = host_pagerank(edges, n_nodes=n_hosts, iters=5, stats=pr_stats)
+        pr = host_pagerank(edges, n_nodes=n_hosts, iters=5)
         n_pr = pr.count()
         timings["host_pagerank"] = round(time.perf_counter() - t0, 2)
         print(json.dumps({"op": "host_pagerank", "rows": n_pr, "n_hosts": n_hosts,
-                          "sec": timings["host_pagerank"], **pr_stats}))
+                          "sec": timings["host_pagerank"]}))
 
     # trustrank: same graph, teleport personalized to 100 seed hosts —
     # identical per-round shape (the seeded base is a literal IN-list
@@ -306,14 +307,12 @@ def main() -> None:
     from nlnieuwscrawler_spark.operators.graph import trustrank
 
     if _want("trustrank"):
-        tr_stats: dict = {}
         t0 = time.perf_counter()
-        tr = trustrank(edges, n_nodes=n_hosts, seeds=list(range(100)),
-                       iters=5, stats=tr_stats)
+        tr = trustrank(edges, n_nodes=n_hosts, seeds=list(range(100)), iters=5)
         n_tr = tr.count()
         timings["trustrank"] = round(time.perf_counter() - t0, 2)
         print(json.dumps({"op": "trustrank", "rows": n_tr, "n_hosts": n_hosts,
-                          "sec": timings["trustrank"], **tr_stats}))
+                          "sec": timings["trustrank"]}))
 
     # link-spam features: four narrow aggs + ONE (src,dst) self-equi-join
     from nlnieuwscrawler_spark.operators.graph import host_link_stats
@@ -448,21 +447,19 @@ def main() -> None:
         ).alias("qscore"),
     )
     if _want("plan_crawl"):
-        pc_stats: dict = {}
         t0 = time.perf_counter()
         pc = plan_crawl(
             edges,
             obs.select(F.pmod(F.col("user_id"), F.lit(n_hosts)).alias("host"),
                        "ts", "value", "event_id"),
             q_host, n_hosts=n_hosts, budget=10_000_000, iters=5,
-            stats=pc_stats,
         )
         bsum = pc.agg(F.sum("quota")).collect()[0][0]
         timings["plan_crawl"] = round(time.perf_counter() - t0, 2)
         assert bsum == 10_000_000, bsum
         print(json.dumps({"op": "plan_crawl", "rows": n_hosts,
                           "quota_sum": bsum,
-                          "sec": timings["plan_crawl"], **pc_stats}))
+                          "sec": timings["plan_crawl"]}))
 
     # VERDICT r4 #7: embeddings leg — IVF ANN at n_vecs = n_docs/2 synthetic
     # 64-d vectors (deterministic: sin of seeded xxhash64), 100 queries

@@ -12,6 +12,7 @@ so if the distinct-bigram join ever dominates, the documented 64-bit
 token pre-hash shrink has a number to beat.
 
 Usage: python scripts/steep_scale_bench.py [n_docs] [cores]
+``cores`` defaults to get_spark's (``SPARK_GRAFT_CPUS``, else every core).
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 32
+    cores = int(sys.argv[2]) if len(sys.argv) > 2 else None
 
     from curation_scale_bench import gen_docs
 
@@ -42,9 +43,10 @@ def main() -> None:
 
     spark = get_spark(
         "nlnc-steep-scale",
-        master=f"local[{cores}]",
-        shuffle_partitions=2 * cores,
+        master=f"local[{cores}]" if cores else None,
+        shuffle_partitions=2 * cores if cores else None,
     )
+    cores = spark.sparkContext.defaultParallelism
     path = f"/tmp/nlnc_curation_docs_{n_docs}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         t0 = time.perf_counter()

@@ -286,6 +286,21 @@ def test_spread_never_shrinks(spark, docs):
     )
 
 
+def test_spread_passes_fileless_input_without_a_job(spark, docs):
+    """A plan that reads no files (here a one-partition checkpoint) comes
+    back from _spread as is, and deciding that starts no Spark job — no
+    ``df.rdd`` probe, which under AQE would run the input's shuffles."""
+    cut = docs.coalesce(1).localCheckpoint()
+    assert cut.rdd.getNumPartitions() == 1
+    sc = spark.sparkContext
+    sc.setJobGroup("spread-fileless", "spread rule test", False)
+    try:
+        assert dedup._spread(cut) is cut
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("spread-fileless")) == []
+
+
 def test_exact_dedup_representative(spark):
     pdf = pd.DataFrame(
         {"doc_id": [10, 7, 3, 9], "text": ["x y z", "x y z", "a b", "x y z"]}

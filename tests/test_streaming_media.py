@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from nlnieuwscrawler_spark.functions import urls as U
 from nlnieuwscrawler_spark.multimodal import media as mm
 from nlnieuwscrawler_spark.operators import asof
 from nlnieuwscrawler_spark.plans import epoch as epoch_plan
@@ -21,7 +22,11 @@ def test_foreachbatch_epoch_matches_batch(spark, tiny_pages_df, tmp_path):
     seeds = fixtures.seeds_df(spark)
     frontier = epoch_plan.seeds_frontier(seeds)
     robots = fixtures.robots_df(spark)
-    pages_latest = asof.latest_snapshot(tiny_pages_df, "url", "warc_ts")
+    # the fp-keyed index run_epoch joins on, built as Crawler builds it
+    pages_latest = asof.latest_snapshot_clustered(
+        tiny_pages_df, "url", "warc_ts", U.url_fingerprint(F.col("url")),
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    ).withColumnRenamed("__fp", "url_fp")
 
     batch_res = epoch_plan.run_epoch(
         frontier, pages_latest, robots,
@@ -121,23 +126,6 @@ def test_media_resize_partition_invariant(spark):
     assert r.filter(F.length("payload_resized") != 64).count() == 0
     kinds = {x["kind"] for x in r.select("kind").distinct().collect()}
     assert kinds == {"image"}
-
-
-def test_decode_features_arrow_equals_pandas(spark):
-    """mapInArrow decode is row-identical to the mapInPandas form — the
-    Arrow-native path is a pure transport change, never a semantic one."""
-    from nlnieuwscrawler_spark.multimodal.media import (
-        decode_features,
-        decode_features_arrow,
-        synth_media_from_documents,
-    )
-
-    m = synth_media_from_documents(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    )
-    a = decode_features(m)
-    b = decode_features_arrow(m)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_latest_snapshot_clustered_equivalent_and_single_exchange(
