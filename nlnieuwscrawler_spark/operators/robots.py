@@ -9,10 +9,12 @@ rule-less rulesets allow everything.
 Spark-first realization: the per-host rulesets are a small dimension —
 **broadcast** equi-join on ``host``, then evaluate the ordered
 ``rules ARRAY<STRUCT<allow,path,order>>`` with higher-order array
-expressions (``array_sort`` + ``filter`` + first element). Zero Python
-boundary, so the filter stays inside WholeStageCodegen and scales with the
-candidate set, not the rule count. Parity with the stdlib parser is pinned
-by tests/test_robots.py.
+expressions (``array_sort`` + ``filter`` + first element).
+:func:`with_robots` keeps every candidate and adds the verdict as an
+``allowed`` flag, so a crawl epoch splits allowed from denied rows on the
+flag instead of joining twice. Zero Python boundary, so the flag stays
+inside WholeStageCodegen and scales with the candidate set, not the rule
+count. Parity with the stdlib parser is pinned by tests/test_robots.py.
 """
 
 from __future__ import annotations
@@ -42,31 +44,23 @@ def robots_allowed(path: Column, rules: Column) -> Column:
     return F.coalesce(F.get(matches, 0)["allow"], F.lit(True))
 
 
-def robots_filter(
-    candidates: DataFrame,
-    robots: DataFrame,
-    path_col: str = "path",
-    host_col: str = "host",
-) -> DataFrame:
-    """LEFT broadcast-join candidates to per-host rules; keep allowed rows.
+def with_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
+    """LEFT broadcast-join candidates to per-host rules; flag each row.
 
-    Adds ``crawl_delay`` (NULL → caller applies the default) and drops the
-    rules payload. Left join (not inner) keeps unknown hosts — allowed by
-    default, exactly like a crawler that finds no robots.txt.
+    Keeps every candidate and adds ``allowed`` (the first-match verdict on
+    its ``path``) and ``crawl_delay`` (NULL → caller applies the default);
+    the rules payload is dropped. Left join (not inner) keeps unknown
+    hosts — allowed by default, like a crawler that finds no robots.txt.
     """
     r = robots.select(
         F.col("host").alias("__r_host"), "rules", "crawl_delay"
     )
     joined = candidates.join(
-        F.broadcast(r), candidates[host_col] == r["__r_host"], "left"
+        F.broadcast(r), candidates["host"] == r["__r_host"], "left"
     )
-    return (
-        joined.withColumn(
-            "__allowed", robots_allowed(F.col(path_col), F.col("rules"))
-        )
-        .filter(F.col("__allowed"))
-        .drop("__r_host", "rules", "__allowed")
-    )
+    return joined.withColumn(
+        "allowed", robots_allowed(F.col("path"), F.col("rules"))
+    ).drop("__r_host", "rules")
 
 
 ROBOTS_PARSE_DDL = (
@@ -156,7 +150,7 @@ def robots_from_responses(
 ) -> DataFrame:
     """(host, robots.txt text) → the engine's robots dimension table —
     the ingestion step the reference performs with urllib.robotparser on
-    every newly-seen host. Output feeds :func:`robots_filter` directly."""
+    every newly-seen host. Output feeds :func:`with_robots` directly."""
     parsed = responses.select(
         F.col(host_col).alias("host"),
         parse_robots_txt(F.col(content_col), agent).alias("__p"),

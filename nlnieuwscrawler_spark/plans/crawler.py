@@ -260,11 +260,14 @@ class Crawler:
     def crawl_log(self) -> DataFrame:
         parts = self.crawl_log_parts
         if self.store is not None and self.config.checkpoint:
+            # each log delta once, in version order: a commit that writes
+            # no log (compact, merge_into) carries the last delta forward
             m = self.store.read_manifest()  # None before the first commit
-            parts = []
+            parts, paths = [], set()
             for v in range(1, (m["version"] if m else 0) + 1):
-                mv = self.store.read_manifest(v)
-                if mv and "crawl_log" in mv["tables"]:
+                t = self.store.read_manifest(v)["tables"].get("crawl_log")
+                if t and t["path"] not in paths:
+                    paths.add(t["path"])
                     parts.append(self.store.read_table(self.spark, "crawl_log", v))
         if not parts:
             return self.spark.createDataFrame([], CRAWL_LOG_SCHEMA)

@@ -1,6 +1,6 @@
 """One crawl epoch as a single declarative DataFrame plan (SURVEY §3.2).
 
-Pipeline per micro-batch (north_star): frontier snapshot → robots filter
+Pipeline per micro-batch (north_star): frontier snapshot → robots flag
 (broadcast join + higher-order rule eval) → politeness budget + salted
 per-host priority rank (windows) → fetch simulation (equi-join against the
 pre-reduced pages index) → extraction (Arrow pandas UDF) → Dutch lang gate
@@ -37,7 +37,6 @@ class EpochResult:
     crawl_log: DataFrame       # this epoch's attempts (seq starts at 1)
     cached: list = field(default_factory=list)  # persisted intermediates —
     #                      caller unpersists after materializing the outputs
-    metrics: dict = field(default_factory=dict)
 
 
 def seeds_frontier(seeds: DataFrame) -> DataFrame:
@@ -48,7 +47,7 @@ def seeds_frontier(seeds: DataFrame) -> DataFrame:
     fetches a canonical URL twice. Deterministic — rows sharing a fp are
     fully identical here (all other columns are seed constants). This also
     keeps fp-uniqueness a frontier INVARIANT (discovered links are already
-    fp-deduped), which the trace join-back in run_epoch relies on.
+    fp-deduped), which run_epoch's joins and attempted-fp read rely on.
     """
     canon = U.normalize_url(F.col("url"))
     return (
@@ -137,20 +136,17 @@ def run_epoch(
     operators.asof.latest_snapshot_clustered, as ``Crawler`` builds it —
     do it once per crawl, not per epoch).
     """
-    # O7 robots: denied URLs leave the frontier and join the seen set (pinned
-    # spec: a denied URL is never fetched and never reconsidered).
+    # O7 robots: ONE broadcast join flags every frontier row; denied URLs
+    # leave the frontier and join the seen set (pinned spec: a denied URL
+    # is never fetched and never reconsidered).
     cand = frontier.withColumn("path", U.url_path(F.col("url")))
-    allowed = robots_op.robots_filter(cand, robots).drop("path")
-    denied_fps = cand.select("url_fp").join(
-        allowed.select("url_fp"), "url_fp", "left_anti"
-    )
+    judged = robots_op.with_robots(cand, robots).drop("path")
+    denied_fps = judged.filter(~F.col("allowed")).select("url_fp")
+    allowed = judged.filter(F.col("allowed"))
 
     # O8/O9/O10 politeness + salted priority rank — on the NARROW
     # projection only: the (host, salt) rank shuffles move ~40 B/row
-    # (fp + host + small ints) instead of carrying the url string. The
-    # url re-attaches below via ONE fp-keyed join against the frontier,
-    # so per epoch the widest frontier column crosses exactly one shuffle
-    # (r3: two — the salted rank repartition AND the fetch join).
+    # (fp + host + small ints) instead of carrying the url string.
     rank_in = allowed.select(
         "url_fp", "host", "depth", "priority", "discovered_epoch",
         "crawl_delay",
@@ -158,9 +154,14 @@ def run_epoch(
     sched = politeness.epoch_schedule(
         rank_in, epoch, salt=salt, epoch_seconds=epoch_seconds
     )
-    deferred = allowed.select(FRONTIER_COLS).join(
-        sched.select("url_fp"), "url_fp", "left_anti"
-    ).select(FRONTIER_COLS)
+    # ONE fp-keyed left join places each allowed row: fetched this epoch
+    # (it has a sched_offset) or deferred to the next. It also re-attaches
+    # the url, so the widest frontier column crosses exactly one shuffle.
+    placed = allowed.select(FRONTIER_COLS).join(
+        sched.select("url_fp", "sched_offset", "fetch_ts_offset"), "url_fp", "left"
+    )
+    deferred = placed.filter(F.col("sched_offset").isNull()).select(FRONTIER_COLS)
+    scheduled = placed.filter(F.col("sched_offset").isNotNull())
 
     # O11 fetch simulation: equi-join the latest-snapshot index on url_fp
     # ALONE — the cached index's hashpartitioning on the 8-byte
@@ -173,8 +174,7 @@ def run_epoch(
     # most one candidate page; the url-equality guard downgrades a
     # cross-set collision to status=miss instead of extracting a wrong
     # page.
-    with_url = sched.join(allowed.select("url_fp", "url"), "url_fp", "inner")
-    joined = with_url.join(
+    joined = scheduled.join(
         pages_latest.select(
             "url_fp",
             F.col("url").alias("__idx_url"),
@@ -217,8 +217,8 @@ def run_epoch(
     )
 
     # ONE extraction pass: everything downstream (crawl_log, link discovery,
-    # frontier merge, metrics) forks from this persisted node — without it,
-    # each materializing job re-runs the fetch join + Arrow UDF.
+    # seen set, frontier merge, metrics) forks from this persisted node —
+    # without it, each materializing job re-runs the fetch join + Arrow UDF.
     gated = gated.persist()
 
     # O19 crawl-order trace: deterministic global sequence. The window form
@@ -279,20 +279,17 @@ def run_epoch(
         "url", "url_fp", "depth", "links"
     )
     new_links = discover_links(ok, epoch)
-    attempted_fps = sched.select("url_fp")
-    # persist: new_seen feeds the Bloom build and the seen-keys union —
-    # without this each consumer re-runs the rank pipeline
-    new_seen = attempted_fps.unionByName(denied_fps).persist()
-    cached.append(new_seen)
+    # `gated` has one row per scheduled fp (fp-unique frontier, left join on
+    # the fp-unique index): the attempted fps need no re-run of the rank
+    new_seen = gated.select("url_fp").unionByName(denied_fps)
     # exact check against the PRE-epoch seen set
     unseen_old = seen_op.filter_unseen(
         new_links, seen_keys.select("url_fp"), "url_fp"
     )
     # This epoch's additions (new_seen) and the deferred rows in ONE exact
-    # anti-join against the epoch's own frontier. robots_filter and
-    # epoch_schedule only drop rows, so
-    #   fps(new_seen) ∪ fps(deferred)
-    #     = fps(denied) ∪ fps(sched) ∪ fps(allowed − sched) = fps(frontier).
+    # anti-join against the epoch's own frontier: each frontier row has one
+    # fate, fps(denied) ⊔ fps(scheduled) ⊔ fps(deferred) = fps(frontier),
+    # and new_seen = denied ⊔ scheduled.
     # No broadcast hint: AQE picks broadcast when the frontier fits.
     fresh = unseen_old.join(frontier.select("url_fp"), "url_fp", "left_anti")
     next_frontier = deferred.unionByName(fresh.select(FRONTIER_COLS))

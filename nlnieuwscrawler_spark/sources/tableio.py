@@ -111,6 +111,8 @@ class SnapshotStore:
         """
         prev = self.read_manifest()
         version = (prev["version"] if prev else 0) + 1
+        if extra is None:  # compact, merge_into: keep the resume counters
+            extra = dict((prev or {}).get("extra") or {})
         entry: dict[str, Any] = {
             "version": version,
             "epoch": epoch,
@@ -121,7 +123,7 @@ class SnapshotStore:
             "fingerprint_spec": _fpspec.FINGERPRINT_SPEC,
             # carry forward unreferenced tables' (immutable) data files
             "tables": dict(prev["tables"]) if prev else {},
-            "extra": extra or {},
+            "extra": extra,
         }
         for name, df in tables.items():
             rel = f"data/{name}-v{version}"

@@ -115,6 +115,43 @@ def test_distributed_trace_is_pure_optimization(spark, tiny_pages_df, engine):
     pd.testing.assert_frame_equal(_log_frame(c), _log_frame(engine))
 
 
+@pytest.mark.parametrize("salt", [1, 4])
+def test_epoch_gives_each_frontier_row_one_fate(spark, tiny_pages_df, salt):
+    """One epoch over a non-empty seen set splits its frontier: attempted
+    rows (the crawl log) and robots-denied rows enter the seen set once
+    each, every other row is deferred to the next frontier, and no new
+    link brings back a URL the epoch already decided."""
+    from nlnieuwscrawler_spark.plans import epoch as epoch_plan
+
+    c = Crawler(
+        spark, tiny_pages_df, fixtures.robots_df(spark), store=None,
+        config=CrawlConfig(max_epochs=1, use_bloom=False, salt=salt,
+                           checkpoint=False),
+    )
+    c.run(seeds=fixtures.seeds_df(spark))
+    res = epoch_plan.run_epoch(
+        c.frontier, c.pages_latest, c.robots, c.seen_keys,
+        epoch=1, salt=salt, seq_base=c.seq_base,
+    )
+
+    def fps(df) -> list:
+        return [r["url_fp"] for r in df.select("url_fp").collect()]
+
+    frontier_in = set(fps(c.frontier))
+    logged = set(fps(res.crawl_log))
+    seen_rows = fps(res.new_seen)
+    next_frontier = set(fps(res.frontier))
+    for cc in res.cached:
+        cc.unpersist()
+    new_seen = set(seen_rows)
+    assert len(seen_rows) == len(new_seen)
+    assert logged <= new_seen <= frontier_in
+    assert not new_seen & next_frontier
+    assert frontier_in <= new_seen | next_frontier
+    # the fixture epoch has all three fates: attempted, denied, deferred
+    assert logged and new_seen - logged and frontier_in & next_frontier
+
+
 def test_politeness_invariant(engine):
     """No two fetches of one host closer than its crawl_delay; per-epoch
     attempts per host never exceed the budget."""

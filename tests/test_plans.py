@@ -54,7 +54,7 @@ def test_robots_join_is_broadcast(spark):
     cand = spark.createDataFrame(
         [("nu.nl", "/sport/x.html", 1)], "host string, path string, url_fp long"
     )
-    out = robots_op.robots_filter(cand, fixtures.robots_df(spark))
+    out = robots_op.with_robots(cand, fixtures.robots_df(spark)).filter("allowed")
     assert "BroadcastHashJoin" in _plan(out)
 
 
@@ -148,6 +148,40 @@ def test_fresh_crawl_unseen_join_folds_away(spark, tiny_pages_df):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan, plan
     assert out.count() == 10
+
+
+def test_epoch_fates_need_no_extra_anti_join(spark, tiny_pages_df):
+    """Each frontier row's fate comes from the robots flag and one schedule
+    join: the epoch's seen additions hold no anti-join, its next frontier
+    holds exactly two (against the pre-epoch seen keys and the epoch's own
+    frontier), and `gated` is the only persisted node. A persisted node
+    prints its cached plan inside the InMemoryRelation, so the counts cover
+    the cached subtree too."""
+    from nlnieuwscrawler_spark.plans import epoch as epoch_plan
+    from nlnieuwscrawler_spark.plans.crawler import Crawler, CrawlConfig
+
+    c = Crawler(
+        spark, tiny_pages_df, fixtures.robots_df(spark), None,
+        CrawlConfig(max_epochs=1, use_bloom=False, checkpoint=False),
+    )
+    # one epoch first: a non-empty seen set keeps the unseen anti-join
+    c.run(seeds=fixtures.seeds_df(spark))
+    res = epoch_plan.run_epoch(
+        c.frontier, c.pages_latest, c.robots, c.seen_keys,
+        epoch=1, seq_base=c.seq_base,
+    )
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    try:
+        assert len(res.cached) == 1
+        assert "LeftAnti" not in optimized(res.new_seen), optimized(res.new_seen)
+        plan = optimized(res.frontier)
+        assert plan.count("LeftAnti") == 2, plan
+    finally:
+        for cc in res.cached:
+            cc.unpersist()
 
 
 def test_fetch_index_not_reexchanged(spark, tiny_pages_df):

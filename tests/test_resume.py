@@ -65,6 +65,35 @@ def test_kill_and_resume_identical(
     assert got_seen == want_seen
 
 
+def test_compact_mid_crawl_keeps_log_and_resume(
+    spark, tiny_pages_df, tmp_path_factory, uninterrupted
+):
+    """Compacting a table between epochs commits a snapshot that writes no
+    crawl log and passes no resume counters: the log must not repeat the
+    carried-forward delta, and a resumed crawl must continue to the
+    uninterrupted log and seen set."""
+    store = SnapshotStore(str(tmp_path_factory.mktemp("snap_compact")))
+    c1 = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), store, _cfg())
+    c1.start(fixtures.seeds_df(spark))
+    for _ in range(KILL_AFTER):
+        c1.step()
+    store.compact(spark, "frontier", epoch=KILL_AFTER)
+    want = _log(uninterrupted)
+    head = want[want["epoch"] < KILL_AFTER].reset_index(drop=True)
+    pd.testing.assert_frame_equal(_log(c1), head)
+    c2 = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), store, _cfg())
+    c2.resume()
+    assert c2.epoch == KILL_AFTER
+    for _ in range(N_EPOCHS - KILL_AFTER):
+        if not c2.frontier.take(1):
+            break
+        c2.step()
+    pd.testing.assert_frame_equal(_log(c2), want)
+    got_seen = {r["url_fp"] for r in c2.seen().collect()}
+    want_seen = {r["url_fp"] for r in uninterrupted.seen().collect()}
+    assert got_seen == want_seen
+
+
 def test_manifest_lineage_recorded(uninterrupted):
     m = uninterrupted.store.read_manifest()
     assert m["epoch"] == N_EPOCHS - 1

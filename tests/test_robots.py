@@ -9,7 +9,7 @@ import urllib.robotparser
 import pandas as pd
 from pyspark.sql import functions as F
 
-from nlnieuwscrawler_spark.operators.robots import robots_allowed, robots_filter
+from nlnieuwscrawler_spark.operators.robots import robots_allowed, with_robots
 from nlnieuwscrawler_spark.sources import fixtures
 
 PATHS = [
@@ -56,7 +56,7 @@ def test_unknown_host_allowed(spark):
     cand = spark.createDataFrame(
         pd.DataFrame([{"host": "volkskrant.nl", "path": "/x.html", "url_fp": 1}])
     )
-    out = robots_filter(cand, fixtures.robots_df(spark))
+    out = with_robots(cand, fixtures.robots_df(spark)).filter("allowed")
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["crawl_delay"] is None
 
@@ -65,7 +65,7 @@ def test_disallow_all_host_filtered(spark):
     cand = spark.createDataFrame(
         pd.DataFrame([{"host": "nrc.nl", "path": "/x.html", "url_fp": 1}])
     )
-    assert robots_filter(cand, fixtures.robots_df(spark)).count() == 0
+    assert with_robots(cand, fixtures.robots_df(spark)).filter("allowed").count() == 0
 
 
 def test_parse_robots_txt_roundtrip_fixture(spark):
