@@ -2,12 +2,13 @@
 
 north_rule: "every epoch checkpoints frontier + Bloom state to Iceberg with
 per-partition lineage and fetch/dedup metrics so the crawl resumes exactly
-mid-frontier". Each epoch commits an atomic snapshot (frontier, seen keys,
-Bloom partitions, crawl-log delta, metrics delta) through
-:class:`~nlnieuwscrawler_spark.sources.tableio.SnapshotStore`; ``resume``
-reconstructs the exact mid-crawl state from the latest committed manifest —
-the kill-and-resume test asserts the resumed crawl_log is identical to an
-uninterrupted run.
+mid-frontier". Each epoch commits an atomic snapshot through
+:class:`~nlnieuwscrawler_spark.sources.tableio.SnapshotStore`: the frontier
+and the Bloom partitions are replaced, and the epoch's crawl-log rows and
+newly seen keys are appended as one more part of the ``crawl_log`` and
+``seen_keys`` tables. ``resume`` reconstructs the exact mid-crawl state from
+the latest committed manifest — the kill-and-resume test asserts the resumed
+crawl_log is identical to an uninterrupted run.
 
 The snapshot write doubles as the per-epoch lineage cut: reading the
 committed parquet back truncates the logical plan, so epoch N+1's plan
@@ -196,7 +197,7 @@ class Crawler:
         o = obs.get  # available once the checkpoint job finished
         by_status = {k: o[k] for k in ("ok", "lang", "miss") if o[k]}
         attempts = int(o["n"])
-        next_seen = self.seen_keys.unionByName(res.new_seen.select("url_fp"))
+        new_keys = res.new_seen.select("url_fp")
 
         if self.config.use_bloom:
             # one executor-side cogroup update; driver sees a counter only
@@ -211,25 +212,24 @@ class Crawler:
                 self.spark,
                 {
                     "frontier": res.frontier,
-                    "seen_keys": next_seen,
+                    "seen_keys": new_keys,
                     "bloom": bloom_df,
                     "crawl_log": log_cached,
                 },
                 epoch=self.epoch,
                 extra={"next_epoch": self.epoch + 1, "seq_base": self.seq_base + attempts},
+                append=("seen_keys", "crawl_log"),
             )
             # read back committed state: truncates lineage AND is the resume path
             self.frontier = self.store.read_table(self.spark, "frontier", version)
             self.seen_keys = self.store.read_table(self.spark, "seen_keys", version)
-            log_df = self.store.read_table(self.spark, "crawl_log", version)
         else:
             self.frontier = res.frontier.localCheckpoint(eager=True)
-            self.seen_keys = next_seen.localCheckpoint(eager=True)
-            log_df = log_cached  # already checkpoint-materialized above
+            self.seen_keys = self.seen_keys.unionByName(new_keys).localCheckpoint(eager=True)
+            self.crawl_log_parts.append(log_cached)
         for c in res.cached:
             c.unpersist()
 
-        self.crawl_log_parts.append(log_df)
         metrics = {
             "epoch": self.epoch,
             "attempted": attempts,
@@ -258,17 +258,10 @@ class Crawler:
 
     # -- outputs ---------------------------------------------------------------
     def crawl_log(self) -> DataFrame:
-        parts = self.crawl_log_parts
         if self.store is not None and self.config.checkpoint:
-            # each log delta once, in version order: a commit that writes
-            # no log (compact, merge_into) carries the last delta forward
-            m = self.store.read_manifest()  # None before the first commit
-            parts, paths = [], set()
-            for v in range(1, (m["version"] if m else 0) + 1):
-                t = self.store.read_manifest(v)["tables"].get("crawl_log")
-                if t and t["path"] not in paths:
-                    paths.add(t["path"])
-                    parts.append(self.store.read_table(self.spark, "crawl_log", v))
+            if self.store.current_version() is not None:  # else nothing ran
+                return self.store.read_table(self.spark, "crawl_log")
+        parts = self.crawl_log_parts
         if not parts:
             return self.spark.createDataFrame([], CRAWL_LOG_SCHEMA)
         out = parts[0]

@@ -7,16 +7,20 @@ runtime jars (SURVEY §7.0), so this module provides the same SEMANTICS —
 atomic snapshot commit, time-travelable versions, manifest-tracked data
 files — behind a thin interface:
 
-- data files: ``<root>/data/<table>-v<version>/part-*.parquet`` (immutable)
+- data files: a table is a list of immutable part directories
+  ``<root>/data/<table>-v<version>/part-*.parquet``; a commit either
+  replaces a table with one new part or appends one part to its list
 - manifest:   ``<root>/_manifests/manifest-<version>.json`` listing every
-  table's data path, row count, per-bucket lineage, and the epoch counter
+  table's part paths, row count, per-bucket lineage, and the epoch counter
 - commit:     write manifest, then ``os.replace`` a pointer file
   ``<root>/_CURRENT`` — the rename is the atomic commit, exactly the
   Iceberg/HadoopCatalog version-hint protocol
 
-Swap-in for real Iceberg: replace ``write_table``/``read_table`` with
-``df.writeTo(tbl).overwritePartitions()`` / ``spark.read.format("iceberg")``
-— the engine only touches this interface.
+The part layout is known only to this module: readers get whole tables
+through ``read_table``. Swap-in for real Iceberg: replace
+``commit``/``read_table`` with ``df.writeTo(tbl).append()`` /
+``overwritePartitions()`` / ``spark.read.format("iceberg")`` — the engine
+only touches this interface.
 """
 
 from __future__ import annotations
@@ -95,8 +99,13 @@ class SnapshotStore:
         lineage_bucket_col: str | None = "url_fp",
         n_lineage_buckets: int = 16,
         partitioning: dict[str, tuple[str, str, int | None]] | None = None,
+        append: tuple[str, ...] = (),
     ) -> int:
         """Write the given tables + manifest, then atomically flip _CURRENT.
+
+        Each written table is replaced by one new part; a table named in
+        ``append`` gains the write as one more part (Iceberg append), and its
+        ``rows`` and ``lineage`` add the new part's to the previous entry's.
 
         Tables NOT in this commit carry forward from the previous manifest
         (their immutable data files are re-referenced, Iceberg-style), so a
@@ -126,9 +135,19 @@ class SnapshotStore:
             "extra": extra,
         }
         for name, df in tables.items():
+            # manifest-recorded schema (Iceberg: schema lives in table
+            # metadata, not the data files) — the read path projects files
+            # to THIS, which is what makes rewrite-free column adds possible
+            # (add_column)
+            schema = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
+            spec = (partitioning or {}).get(name)
+            old = entry["tables"].get(name) if name in append else None
+            if old is not None:  # the new part takes the table's layout
+                if old["schema"] != schema or spec is not None:
+                    raise ValueError(f"an append to {name!r} keeps its schema and layout")
+                spec = old["partitioning"]
             rel = f"data/{name}-v{version}"
             path = os.path.join(self.root, rel)
-            spec = (partitioning or {}).get(name)
             if spec is not None:
                 kind, src_col, arg = spec
                 (
@@ -144,28 +163,34 @@ class SnapshotStore:
             written = spark.read.parquet(path)
             lineage = None
             if lineage_bucket_col and lineage_bucket_col in written.columns:
-                lineage = [
-                    {"bucket": r["bucket"], "rows": r["rows"]}
-                    for r in written.groupBy(
-                        F.pmod(F.col(lineage_bucket_col), F.lit(n_lineage_buckets)).alias("bucket")
-                    )
-                    .agg(F.count("*").alias("rows"))
-                    .collect()
-                ]
+                bucket = F.pmod(F.col(lineage_bucket_col), F.lit(n_lineage_buckets))
+                lineage = dict(written.groupBy(bucket).count().collect())
+                rows = sum(lineage.values())
+            else:
+                rows = written.count()
+            paths = [rel]
+            if old is not None:
+                paths = old["paths"] + paths
+                rows += old["rows"]
+                if lineage is not None and old["lineage"] is not None:
+                    for b in old["lineage"]:
+                        lineage[b["bucket"]] = lineage.get(b["bucket"], 0) + b["rows"]
+                else:
+                    lineage = None
             entry["tables"][name] = {
-                "path": rel,
-                "rows": written.count(),
-                "lineage": lineage,
-                "partitioning": list(spec) if spec is not None else None,
-                # manifest-recorded schema (Iceberg: schema lives in table
-                # metadata, not the data files) — the read path projects
-                # files to THIS, which is what makes rewrite-free column
-                # adds possible (add_column)
-                "schema": [
-                    [f.name, f.dataType.simpleString()]
-                    for f in df.schema.fields
+                "paths": paths,
+                "rows": rows,
+                "lineage": None if lineage is None else [
+                    {"bucket": b, "rows": n} for b, n in lineage.items()
                 ],
+                "partitioning": list(spec) if spec is not None else None,
+                "schema": schema,
             }
+        return self._publish(entry)
+
+    def _publish(self, entry: dict[str, Any]) -> int:
+        """Write the manifest, then flip _CURRENT to its version."""
+        version = entry["version"]
         mpath = os.path.join(self.root, "_manifests", f"manifest-{version}.json")
         with open(mpath + ".tmp", "w") as f:
             json.dump(entry, f, indent=1, default=str)
@@ -201,12 +226,12 @@ class SnapshotStore:
         if m is None or name not in m["tables"]:
             raise KeyError(f"no snapshot for table {name!r}")
         meta = m["tables"][name]
-        df = spark.read.parquet(os.path.join(self.root, meta["path"]))
+        df = spark.read.parquet(*(os.path.join(self.root, p) for p in meta["paths"]))
         if prune:
             spec = meta.get("partitioning")
             if not spec:
                 raise ValueError(f"table {name!r} has no hidden partitioning")
-            kind, src_col, arg = spec[0], spec[1], spec[2]
+            kind, src_col, arg = spec
             for col, value in prune.items():
                 if col != src_col:
                     raise ValueError(f"pruning on {col!r}, partitioned by {src_col!r}")
@@ -220,22 +245,15 @@ class SnapshotStore:
         # by add_column after these files were written materialize as typed
         # nulls; column order follows the manifest, so every snapshot of a
         # table presents one consistent shape regardless of file vintage
-        schema = meta.get("schema")
-        if schema:
-            cols = []
-            for entry in schema:
-                # [name, type] or [name, type, source_file_name] — the
-                # third element is the on-disk column name after a
-                # rename_column (the emulation's stand-in for Iceberg
-                # field IDs)
-                cname, ctype = entry[0], entry[1]
-                src = entry[2] if len(entry) > 2 else cname
-                if src in df.columns:
-                    cols.append(F.col(src).alias(cname))
-                else:
-                    cols.append(F.lit(None).cast(ctype).alias(cname))
-            df = df.select(*cols)
-        return df
+        cols = []
+        for cname, ctype, *source in meta["schema"]:
+            # [name, type] or [name, type, source_file_name] — the third
+            # element is the on-disk column name after a rename_column (the
+            # emulation's stand-in for Iceberg field IDs)
+            src = source[0] if source else cname
+            cols.append(F.col(src).alias(cname) if src in df.columns
+                        else F.lit(None).cast(ctype).alias(cname))
+        return df.select(*cols)
 
     # -- MERGE INTO (copy-on-write upsert/delete) ---------------------------
     def merge_into(
@@ -279,11 +297,12 @@ class SnapshotStore:
         target_files: int = 1,
         extra: dict[str, Any] | None = None,
     ) -> int:
-        """Iceberg rewrite_data_files equivalent: rewrite a table's data
-        into ``target_files`` files as a NEW snapshot (old versions stay
-        time-travelable until expired). The small-files problem is chronic
-        for checkpoint-per-epoch crawls — thousands of tiny frontier/log
-        files per day turn every scan into a listing storm; periodic
+        """Iceberg rewrite_data_files equivalent: rewrite all of a table's
+        parts into one part of ``target_files`` files as a NEW snapshot (old
+        versions stay time-travelable until expired). The small-files
+        problem is chronic for checkpoint-per-epoch crawls — thousands of
+        tiny frontier/log files per day turn every scan into a listing
+        storm (past 32 parts a read lists them with a Spark job); periodic
         compaction through the same atomic-commit path fixes it without a
         write lock (readers keep using the previous snapshot until the
         pointer flips). The table's hidden-partition spec survives the
@@ -291,10 +310,8 @@ class SnapshotStore:
         read_table strips the derived ``__p`` column, so the spec must be
         re-applied from the manifest or compaction would silently flatten
         a partitioned table and break every subsequent pruned read."""
-        m = self.read_manifest()
-        spec = (m["tables"][name].get("partitioning")
-                if m and name in m["tables"] else None)
         df = self.read_table(spark, name).coalesce(target_files)
+        spec = self.read_manifest()["tables"][name]["partitioning"]
         return self.commit(
             spark, {name: df}, epoch=epoch, extra=extra,
             partitioning={name: tuple(spec)} if spec else None,
@@ -324,11 +341,7 @@ class SnapshotStore:
         resurrect them (ADVICE r4). The sentinel is guaranteed absent
         from data files, and the next real write of the table rebuilds
         the schema from the DataFrame, collapsing source back to name."""
-        prev = self.read_manifest()
-        if prev is None or name not in prev["tables"]:
-            raise KeyError(f"no snapshot for table {name!r}")
-        meta = dict(prev["tables"][name])
-        schema = [list(c) for c in (meta.get("schema") or [])]
+        prev, meta, schema = self._current_entry(name)
         if any(c[0] == col_name for c in schema):
             raise ValueError(f"column {col_name!r} already exists on {name!r}")
         schema.append(
@@ -343,11 +356,7 @@ class SnapshotStore:
         never see it (the read path projects to the manifest schema),
         time travel to older versions still does. Dropping the hidden
         partition source column is refused (pruning would break)."""
-        prev = self.read_manifest()
-        if prev is None or name not in prev["tables"]:
-            raise KeyError(f"no snapshot for table {name!r}")
-        meta = dict(prev["tables"][name])
-        schema = [list(c) for c in (meta.get("schema") or [])]
+        prev, meta, schema = self._current_entry(name)
         if not any(c[0] == col_name for c in schema):
             raise KeyError(f"no column {col_name!r} on {name!r}")
         part = meta.get("partitioning")
@@ -368,11 +377,7 @@ class SnapshotStore:
         the partition spec tracks the field (by ID there, by updated
         name here), so ``read_table(prune={new_name: v})`` keeps working
         — the on-disk ``__p`` directory values never change (ADVICE r4)."""
-        prev = self.read_manifest()
-        if prev is None or name not in prev["tables"]:
-            raise KeyError(f"no snapshot for table {name!r}")
-        meta = dict(prev["tables"][name])
-        schema = [list(c) for c in (meta.get("schema") or [])]
+        prev, meta, schema = self._current_entry(name)
         if any(c[0] == new for c in schema):
             raise ValueError(f"column {new!r} already exists on {name!r}")
         hit = False
@@ -393,29 +398,26 @@ class SnapshotStore:
             meta["partitioning"] = [part[0], new, part[2]]
         return self._commit_metadata(prev, name, meta, epoch)
 
+    def _current_entry(self, name: str):
+        """The current manifest plus copies of ``name``'s entry and schema."""
+        prev = self.read_manifest()
+        if prev is None or name not in prev["tables"]:
+            raise KeyError(f"no snapshot for table {name!r}")
+        meta = dict(prev["tables"][name])
+        return prev, meta, [list(c) for c in meta["schema"]]
+
     def _commit_metadata(self, prev, name: str, meta, epoch: int) -> int:
         """Metadata-only snapshot commit (schema evolution): data files are
         the previous version's, so the fingerprint stamp carries forward."""
-        version = prev["version"] + 1
         entry = {
-            "version": version,
+            "version": prev["version"] + 1,
             "epoch": epoch,
             "committed_at": time.time(),
-            "fingerprint_spec": prev.get(
-                "fingerprint_spec", _fpspec.FINGERPRINT_SPEC
-            ),
+            "fingerprint_spec": prev.get("fingerprint_spec", _fpspec.FINGERPRINT_SPEC),
             "tables": {**prev["tables"], name: meta},
             "extra": dict(prev.get("extra") or {}),
         }
-        mpath = os.path.join(self.root, "_manifests", f"manifest-{version}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(entry, f, indent=1, default=str)
-        os.replace(mpath + ".tmp", mpath)
-        ptr = os.path.join(self.root, "_CURRENT")
-        with open(ptr + ".tmp", "w") as f:
-            f.write(str(version))
-        os.replace(ptr + ".tmp", ptr)
-        return version
+        return self._publish(entry)
 
     # -- tags / refs (Iceberg branch-less refs) -----------------------------
     def tag(self, tag_name: str, version: int | None = None) -> int:
@@ -442,9 +444,10 @@ class SnapshotStore:
 
     def expire_snapshots(self, keep_last: int = 2) -> None:
         """GC versioned data dirs unreachable from the kept manifests
-        (Iceberg expire_snapshots): carry-forward means an OLD version's
-        files may still be referenced by a NEWER manifest — reachability,
-        not age, decides deletion."""
+        (Iceberg expire_snapshots): carry-forward and appends mean an OLD
+        version's part may still be listed by a NEWER manifest — every part
+        a kept manifest lists survives; reachability, not age, decides
+        deletion."""
         cur = self.current_version()
         if cur is None:
             return
@@ -456,7 +459,8 @@ class SnapshotStore:
             m = self.read_manifest(v)
             if m:
                 referenced.update(
-                    os.path.basename(t["path"]) for t in m["tables"].values()
+                    os.path.basename(p)
+                    for t in m["tables"].values() for p in t["paths"]
                 )
         data = os.path.join(self.root, "data")
         for d in os.listdir(data):

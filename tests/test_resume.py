@@ -65,19 +65,17 @@ def test_kill_and_resume_identical(
     assert got_seen == want_seen
 
 
-def test_compact_mid_crawl_keeps_log_and_resume(
-    spark, tiny_pages_df, tmp_path_factory, uninterrupted
+def _maintain_mid_crawl_then_resume(
+    spark, tiny_pages_df, store, uninterrupted, maintain
 ):
-    """Compacting a table between epochs commits a snapshot that writes no
-    crawl log and passes no resume counters: the log must not repeat the
-    carried-forward delta, and a resumed crawl must continue to the
-    uninterrupted log and seen set."""
-    store = SnapshotStore(str(tmp_path_factory.mktemp("snap_compact")))
+    """Kill after KILL_AFTER epochs, run a store maintenance call, then
+    check that the log is the uninterrupted log's head and that a resumed
+    crawl continues to the uninterrupted log and seen set."""
     c1 = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), store, _cfg())
     c1.start(fixtures.seeds_df(spark))
     for _ in range(KILL_AFTER):
         c1.step()
-    store.compact(spark, "frontier", epoch=KILL_AFTER)
+    maintain()
     want = _log(uninterrupted)
     head = want[want["epoch"] < KILL_AFTER].reset_index(drop=True)
     pd.testing.assert_frame_equal(_log(c1), head)
@@ -94,12 +92,44 @@ def test_compact_mid_crawl_keeps_log_and_resume(
     assert got_seen == want_seen
 
 
-def test_manifest_lineage_recorded(uninterrupted):
-    m = uninterrupted.store.read_manifest()
+@pytest.mark.parametrize("table", ["frontier", "crawl_log", "seen_keys"])
+def test_compact_mid_crawl_keeps_log_and_resume(
+    spark, tiny_pages_df, tmp_path_factory, uninterrupted, table
+):
+    """Compacting a table between epochs commits a snapshot that writes no
+    crawl log and passes no resume counters: the log must not repeat any
+    part, and a resumed crawl must continue to the uninterrupted log and
+    seen set. Compacting an appended table folds its parts into one."""
+    store = SnapshotStore(str(tmp_path_factory.mktemp(f"snap_compact_{table}")))
+    _maintain_mid_crawl_then_resume(
+        spark, tiny_pages_df, store, uninterrupted,
+        lambda: store.compact(spark, table, epoch=KILL_AFTER),
+    )
+
+
+def test_expire_mid_crawl_keeps_log_and_resume(
+    spark, tiny_pages_df, tmp_path_factory, uninterrupted
+):
+    """Expiring every snapshot but the current one keeps every part the
+    current manifest lists: the whole log so far, and the seen keys that
+    resume reads."""
+    store = SnapshotStore(str(tmp_path_factory.mktemp("snap_expire")))
+    _maintain_mid_crawl_then_resume(
+        spark, tiny_pages_df, store, uninterrupted,
+        lambda: store.expire_snapshots(keep_last=1),
+    )
+
+
+def test_manifest_lineage_recorded(spark, uninterrupted):
+    store = uninterrupted.store
+    m = store.read_manifest()
     assert m["epoch"] == N_EPOCHS - 1
-    fr = m["tables"]["frontier"]
-    assert fr["lineage"] is not None and sum(b["rows"] for b in fr["lineage"]) == fr["rows"]
-    assert "seen_keys" in m["tables"] and "bloom" in m["tables"]
+    for name in ("frontier", "seen_keys", "crawl_log"):
+        t = m["tables"][name]
+        assert t["lineage"] is not None, name
+        assert sum(b["rows"] for b in t["lineage"]) == t["rows"], name
+        assert t["rows"] == store.read_table(spark, name).count(), name
+    assert "bloom" in m["tables"]
 
 
 def test_expire_snapshots_keeps_current_readable(spark, uninterrupted):

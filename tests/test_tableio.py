@@ -114,6 +114,44 @@ def test_compact_rewrites_small_files(spark, store):
     assert store.read_table(spark, "t", version=v1).count() == 5000
 
 
+def test_append_parts_time_travel_compact_and_expire(spark, store):
+    """A table named in ``append`` keeps its parts and gains one more:
+    reads see every appended row once, time travel sees the parts of its
+    version, rows and lineage add up bucket by bucket, expiry keeps every
+    part the current manifest lists, and compact folds them into one."""
+    def log(rows):
+        return spark.createDataFrame(rows, "url_fp long, v string")
+
+    def read(**kw):
+        return sorted(tuple(r) for r in store.read_table(spark, "log", **kw).collect())
+
+    v1 = store.commit(spark, {"log": log([(1, "a"), (2, "b")])}, epoch=0,
+                      append=("log",))
+    store.commit(spark, {"log": log([(17, "c")]), "t": _kv(spark, [(9, "z")])},
+                 epoch=1, append=("log",))
+    store.commit(spark, {"t": _kv(spark, [(8, "y")])}, epoch=2)  # replace
+    everything = [(1, "a"), (2, "b"), (17, "c")]
+    assert read() == everything
+    assert read(version=v1) == [(1, "a"), (2, "b")]
+    meta = store.read_manifest()["tables"]["log"]
+    assert meta["paths"] == ["data/log-v1", "data/log-v2"]
+    assert meta["rows"] == 3
+    assert {b["bucket"]: b["rows"] for b in meta["lineage"]} == {1: 2, 2: 1}
+    with pytest.raises(ValueError, match="schema"):
+        store.commit(spark, {"log": _kv(spark, [(3, "d")])}, epoch=3,
+                     append=("log",))
+
+    store.expire_snapshots(keep_last=1)
+    data = set(os.listdir(os.path.join(store.root, "data")))
+    assert {"log-v1", "log-v2", "t-v3"} <= data and "t-v2" not in data
+    assert read() == everything
+
+    v = store.compact(spark, "log", epoch=3)
+    meta = store.read_manifest()["tables"]["log"]
+    assert meta["paths"] == [f"data/log-v{v}"] and meta["rows"] == 3
+    assert read() == everything
+
+
 def test_schema_evolution_add_column(spark, tmp_path):
     """Iceberg-style rewrite-free ADD COLUMN: new snapshot shows the column
     as typed nulls over the OLD files; a later write populates it; time
@@ -140,7 +178,7 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert t2.filter(F.col("score").isNotNull()).count() == 0
     # the evolution commit moved ZERO data: v2 references v1's files
     m1, m2 = store.read_manifest(v1), store.read_manifest(v2)
-    assert m1["tables"]["t"]["path"] == m2["tables"]["t"]["path"]
+    assert m1["tables"]["t"]["paths"] == m2["tables"]["t"]["paths"]
 
 
 def test_schema_evolution_drop_and_rename(spark, store):
