@@ -121,6 +121,9 @@ class Crawler:
 
     # -- lifecycle -----------------------------------------------------------
     def start(self, seeds: DataFrame) -> None:
+        # a fresh crawl: its first commit replaces whatever the store holds
+        self.epoch = self.seq_base = 0
+        self.metrics_rows, self.crawl_log_parts = [], []
         # materialize: the seed frontier is consumed by several jobs per
         # epoch; lazy, it would re-canonicalize the seed list in each one
         self.frontier = epoch_plan.seeds_frontier(seeds).localCheckpoint(eager=True)
@@ -218,7 +221,9 @@ class Crawler:
                 },
                 epoch=self.epoch,
                 extra={"next_epoch": self.epoch + 1, "seq_base": self.seq_base + attempts},
-                append=("seen_keys", "crawl_log"),
+                # a fresh crawl's first epoch replaces what an earlier crawl
+                # left in the store; resume() always sets epoch >= 1
+                append=("seen_keys", "crawl_log") if self.epoch > 0 else (),
             )
             # read back committed state: truncates lineage AND is the resume path
             self.frontier = self.store.read_table(self.spark, "frontier", version)
@@ -258,9 +263,8 @@ class Crawler:
 
     # -- outputs ---------------------------------------------------------------
     def crawl_log(self) -> DataFrame:
-        if self.store is not None and self.config.checkpoint:
-            if self.store.current_version() is not None:  # else nothing ran
-                return self.store.read_table(self.spark, "crawl_log")
+        if self.store is not None and self.config.checkpoint and self.epoch > 0:
+            return self.store.read_table(self.spark, "crawl_log")
         parts = self.crawl_log_parts
         if not parts:
             return self.spark.createDataFrame([], CRAWL_LOG_SCHEMA)

@@ -10,6 +10,7 @@ files — behind a thin interface:
 - data files: a table is a list of immutable part directories
   ``<root>/data/<table>-v<version>/part-*.parquet``; a commit either
   replaces a table with one new part or appends one part to its list
+  (folding the list into one part past Spark's one-job listing limit)
 - manifest:   ``<root>/_manifests/manifest-<version>.json`` listing every
   table's part paths, row count, per-bucket lineage, and the epoch counter
 - commit:     write manifest, then ``os.replace`` a pointer file
@@ -106,6 +107,12 @@ class SnapshotStore:
         Each written table is replaced by one new part; a table named in
         ``append`` gains the write as one more part (Iceberg append), and its
         ``rows`` and ``lineage`` add the new part's to the previous entry's.
+        An append folds the table's parts and the write into one part
+        instead when the write's columns differ from the table's current
+        schema (parts of two schemas would read wrong; renamed columns are
+        mapped to their new names first), or when the table already has
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` parts (a
+        read over more parts lists them with one more Spark job).
 
         Tables NOT in this commit carry forward from the previous manifest
         (their immutable data files are re-referenced, Iceberg-style), so a
@@ -134,18 +141,30 @@ class SnapshotStore:
             "tables": dict(prev["tables"]) if prev else {},
             "extra": extra,
         }
+        max_parts = int(
+            spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+        )
         for name, df in tables.items():
+            spec = (partitioning or {}).get(name)
+            old = entry["tables"].get(name) if name in append else None
+            if old is not None:  # the new part takes the table's layout
+                if spec is not None:
+                    raise ValueError(f"an append to {name!r} keeps its layout")
+                spec = old["partitioning"]
+                cols = sorted((f.name, f.dataType.simpleString()) for f in df.schema.fields)
+                if cols != sorted(map(tuple, old["schema"])) or len(old["paths"]) >= max_parts:
+                    for cname, _, *source in old["schema"]:
+                        if source and source[0] in df.columns:
+                            df = df.withColumnRenamed(source[0], cname)
+                    df = self.read_table(spark, name).unionByName(
+                        df, allowMissingColumns=True
+                    )
+                    old = None
             # manifest-recorded schema (Iceberg: schema lives in table
             # metadata, not the data files) — the read path projects files
             # to THIS, which is what makes rewrite-free column adds possible
             # (add_column)
             schema = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
-            spec = (partitioning or {}).get(name)
-            old = entry["tables"].get(name) if name in append else None
-            if old is not None:  # the new part takes the table's layout
-                if old["schema"] != schema or spec is not None:
-                    raise ValueError(f"an append to {name!r} keeps its schema and layout")
-                spec = old["partitioning"]
             rel = f"data/{name}-v{version}"
             path = os.path.join(self.root, rel)
             if spec is not None:
@@ -231,7 +250,7 @@ class SnapshotStore:
             spec = meta.get("partitioning")
             if not spec:
                 raise ValueError(f"table {name!r} has no hidden partitioning")
-            kind, src_col, arg = spec
+            kind, src_col, arg = spec[0], spec[1], spec[2]
             for col, value in prune.items():
                 if col != src_col:
                     raise ValueError(f"pruning on {col!r}, partitioned by {src_col!r}")
@@ -245,15 +264,22 @@ class SnapshotStore:
         # by add_column after these files were written materialize as typed
         # nulls; column order follows the manifest, so every snapshot of a
         # table presents one consistent shape regardless of file vintage
-        cols = []
-        for cname, ctype, *source in meta["schema"]:
-            # [name, type] or [name, type, source_file_name] — the third
-            # element is the on-disk column name after a rename_column (the
-            # emulation's stand-in for Iceberg field IDs)
-            src = source[0] if source else cname
-            cols.append(F.col(src).alias(cname) if src in df.columns
-                        else F.lit(None).cast(ctype).alias(cname))
-        return df.select(*cols)
+        schema = meta.get("schema")
+        if schema:
+            cols = []
+            for entry in schema:
+                # [name, type] or [name, type, source_file_name] — the
+                # third element is the on-disk column name after a
+                # rename_column (the emulation's stand-in for Iceberg
+                # field IDs)
+                cname, ctype = entry[0], entry[1]
+                src = entry[2] if len(entry) > 2 else cname
+                if src in df.columns:
+                    cols.append(F.col(src).alias(cname))
+                else:
+                    cols.append(F.lit(None).cast(ctype).alias(cname))
+            df = df.select(*cols)
+        return df
 
     # -- MERGE INTO (copy-on-write upsert/delete) ---------------------------
     def merge_into(
@@ -310,8 +336,10 @@ class SnapshotStore:
         read_table strips the derived ``__p`` column, so the spec must be
         re-applied from the manifest or compaction would silently flatten
         a partitioned table and break every subsequent pruned read."""
+        m = self.read_manifest()
+        spec = (m["tables"][name].get("partitioning")
+                if m and name in m["tables"] else None)
         df = self.read_table(spark, name).coalesce(target_files)
-        spec = self.read_manifest()["tables"][name]["partitioning"]
         return self.commit(
             spark, {name: df}, epoch=epoch, extra=extra,
             partitioning={name: tuple(spec)} if spec else None,
@@ -404,7 +432,7 @@ class SnapshotStore:
         if prev is None or name not in prev["tables"]:
             raise KeyError(f"no snapshot for table {name!r}")
         meta = dict(prev["tables"][name])
-        return prev, meta, [list(c) for c in meta["schema"]]
+        return prev, meta, [list(c) for c in (meta.get("schema") or [])]
 
     def _commit_metadata(self, prev, name: str, meta, epoch: int) -> int:
         """Metadata-only snapshot commit (schema evolution): data files are
@@ -413,7 +441,9 @@ class SnapshotStore:
             "version": prev["version"] + 1,
             "epoch": epoch,
             "committed_at": time.time(),
-            "fingerprint_spec": prev.get("fingerprint_spec", _fpspec.FINGERPRINT_SPEC),
+            "fingerprint_spec": prev.get(
+                "fingerprint_spec", _fpspec.FINGERPRINT_SPEC
+            ),
             "tables": {**prev["tables"], name: meta},
             "extra": dict(prev.get("extra") or {}),
         }

@@ -120,6 +120,24 @@ def test_expire_mid_crawl_keeps_log_and_resume(
     )
 
 
+def test_reseeded_store_crawl_matches_single_run(
+    spark, tiny_pages_df, tmp_path_factory, uninterrupted
+):
+    """A fresh crawl over a store that already holds a crawl replaces that
+    crawl's log and seen keys at its first epoch: appending to them would
+    hide every URL the earlier crawl saw and shorten the new crawl. The
+    re-seeded crawler also restarts its epoch and attempt counters."""
+    store = SnapshotStore(str(tmp_path_factory.mktemp("snap_reseed")))
+    c = Crawler(spark, tiny_pages_df, fixtures.robots_df(spark), store, _cfg())
+    c.run(seeds=fixtures.seeds_df(spark), max_epochs=KILL_AFTER)
+    assert c.run(seeds=fixtures.seeds_df(spark))["epochs"] == N_EPOCHS
+    assert c.metrics_rows == uninterrupted.metrics_rows
+    pd.testing.assert_frame_equal(_log(c), _log(uninterrupted))
+    want_seen = {r["url_fp"] for r in uninterrupted.seen().collect()}
+    assert store.read_table(spark, "seen_keys").count() == len(want_seen)
+    assert {r["url_fp"] for r in c.seen().collect()} == want_seen
+
+
 def test_manifest_lineage_recorded(spark, uninterrupted):
     store = uninterrupted.store
     m = store.read_manifest()

@@ -137,9 +137,9 @@ def test_append_parts_time_travel_compact_and_expire(spark, store):
     assert meta["paths"] == ["data/log-v1", "data/log-v2"]
     assert meta["rows"] == 3
     assert {b["bucket"]: b["rows"] for b in meta["lineage"]} == {1: 2, 2: 1}
-    with pytest.raises(ValueError, match="schema"):
-        store.commit(spark, {"log": _kv(spark, [(3, "d")])}, epoch=3,
-                     append=("log",))
+    with pytest.raises(ValueError, match="layout"):
+        store.commit(spark, {"log": log([(3, "d")])}, epoch=3, append=("log",),
+                     partitioning={"log": ("bucket", "url_fp", 4)})
 
     store.expire_snapshots(keep_last=1)
     data = set(os.listdir(os.path.join(store.root, "data")))
@@ -150,6 +150,40 @@ def test_append_parts_time_travel_compact_and_expire(spark, store):
     meta = store.read_manifest()["tables"]["log"]
     assert meta["paths"] == [f"data/log-v{v}"] and meta["rows"] == 3
     assert read() == everything
+
+
+def test_append_folds_parts_on_schema_change_and_part_limit(spark, store):
+    """An append folds the table's parts and the write into one part when
+    the table already holds as many parts as one read lists without an
+    extra Spark job, and when the write's columns differ from the table's
+    evolved schema (renamed columns map to their new names)."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+    def append(epoch, rows):
+        df = spark.createDataFrame(rows, "url_fp long, v string")
+        store.commit(spark, {"log": df}, epoch=epoch, append=("log",))
+        meta = store.read_manifest()["tables"]["log"]
+        assert meta["rows"] == sum(b["rows"] for b in meta["lineage"])
+        assert meta["rows"] == store.read_table(spark, "log").count()
+        return len(meta["paths"])
+
+    spark.conf.set(key, "2")
+    try:
+        assert append(0, [(1, "a")]) == 1
+        assert append(1, [(2, "b")]) == 2
+        assert append(2, [(3, "c")]) == 1  # a third part would pass the limit
+    finally:
+        spark.conf.unset(key)
+    store.add_column("log", "score", "double", epoch=3)
+    assert append(3, [(4, "d")]) == 1
+    store.rename_column("log", "v", "w", epoch=4)
+    assert append(4, [(5, "e")]) == 1
+    t = store.read_table(spark, "log")
+    assert t.columns == ["url_fp", "w", "score"]
+    assert sorted(tuple(r) for r in t.collect()) == [
+        (1, "a", None), (2, "b", None), (3, "c", None), (4, "d", None), (5, "e", None)
+    ]
+    assert append(5, [(6, "f")]) == 1  # the writer still names the column v
 
 
 def test_schema_evolution_add_column(spark, tmp_path):
