@@ -164,23 +164,28 @@ def run_epoch(
     scheduled = placed.filter(F.col("sched_offset").isNotNull())
 
     # O11 fetch simulation: equi-join the latest-snapshot index on url_fp
-    # ALONE — the cached index's hashpartitioning on the 8-byte
-    # fingerprint (Crawler pre-partitions + pre-sorts it, fp-unique by
-    # construction) meets the join's distribution requirement exactly
+    # ALONE. Without a hint the planner broadcast the index whenever the
+    # materialized cache measured under autoBroadcastJoinThreshold: every
+    # page's html was collected to the driver and rebuilt as a hash
+    # relation each epoch (16 MiB for perfbench's 5k-page corpus). The
+    # merge hint pins a sort-merge join at every corpus size. The cached
+    # index's hashpartitioning on the 8-byte fingerprint (Crawler
+    # pre-partitions + pre-sorts it, fp-unique by construction) meets the
+    # join's distribution requirement exactly
     # (requireAllClusterKeysForCoPartition: keys == partition keys), so
-    # html never re-shuffles or re-sorts per epoch and only narrow
-    # fp-keyed rows move. Exactness under (astronomically unlikely) fp
-    # collisions: the index is fp-unique, so each scheduled URL joins at
-    # most one candidate page; the url-equality guard downgrades a
-    # cross-set collision to status=miss instead of extracting a wrong
-    # page.
+    # html never moves, re-shuffles or re-sorts per epoch and only narrow
+    # fp-keyed rows are exchanged. Exactness under (astronomically
+    # unlikely) fp collisions: the index is fp-unique, so each scheduled
+    # URL joins at most one candidate page; the url-equality guard
+    # downgrades a cross-set collision to status=miss instead of
+    # extracting a wrong page.
     joined = scheduled.join(
         pages_latest.select(
             "url_fp",
             F.col("url").alias("__idx_url"),
             F.col("html"),
             F.col("lang").alias("corpus_lang"),
-        ),
+        ).hint("merge"),
         on="url_fp",
         how="left",
     )

@@ -7,6 +7,8 @@ small dims broadcast, top-K compiles to TakeOrderedAndProject.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from nlnieuwscrawler_spark.operators import robots as robots_op
@@ -192,51 +194,68 @@ def test_fetch_index_not_reexchanged(spark, tiny_pages_df):
     url_fp ALONE against an fp-partitioned fp-unique index (so the narrow
     frontier side stops carrying the url string through rank shuffles);
     the invariant under test is unchanged: the executed fetch-join plan
-    must show NO Exchange feeding the index-side InMemoryTableScan."""
+    must show NO Exchange feeding the index-side InMemoryTableScan.
+
+    Runs at the session's default conf: the merge hint on the index side
+    makes the sort-merge join the plan at every corpus size, so the html
+    index projection must never be broadcast either."""
     from nlnieuwscrawler_spark.plans.crawler import Crawler, CrawlConfig
     from nlnieuwscrawler_spark.sources import fixtures
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # tiny fixtures would broadcast the index (also shuffle-free, but
-        # not the path under test at corpus scale) — force the SMJ path
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        c = Crawler(
-            spark, tiny_pages_df, fixtures.robots_df(spark), None,
-            CrawlConfig(max_epochs=1, use_bloom=False, checkpoint=False),
-        )
-        c.pages_latest.count()  # materialize the cache (as the crawl does)
-        c.start(fixtures.seeds_df(spark))
-        c.step()
-        log = c.crawl_log_parts[0]
-        assert log.count() > 0
-        # inspect the executed plan of a fresh epoch's crawl_log
-        from nlnieuwscrawler_spark.plans import epoch as epoch_plan
+    c = Crawler(
+        spark, tiny_pages_df, fixtures.robots_df(spark), None,
+        CrawlConfig(max_epochs=1, use_bloom=False, checkpoint=False),
+    )
+    c.pages_latest.count()  # materialize the cache (as the crawl does)
+    c.start(fixtures.seeds_df(spark))
+    c.step()
+    log = c.crawl_log_parts[0]
+    assert log.count() > 0
+    # inspect the executed plan of a fresh epoch's crawl_log
+    from nlnieuwscrawler_spark.plans import epoch as epoch_plan
 
-        res = epoch_plan.run_epoch(
-            c.frontier, c.pages_latest, c.robots, c.seen_keys,
-            epoch=1, seq_base=c.seq_base,
-        )
-        res.crawl_log.count()
-        plan = res.crawl_log._jdf.queryExecution().executedPlan().toString()
-        lines = plan.splitlines()
-        # only the corpus-index scan matters (it carries the html payload);
-        # the gated cache feeding the single-partition trace window has a
-        # legitimate ENSURE_REQUIREMENTS exchange above it
-        scan_idx = [
-            i for i, l in enumerate(lines)
-            if "InMemoryTableScan" in l and "html" in l
-        ]
-        assert scan_idx, plan
-        for i in scan_idx:
-            # allow the cached REPARTITION exchange INSIDE the relation,
-            # forbid an ENSURE_REQUIREMENTS exchange feeding the scan
-            above = "\n".join(lines[max(0, i - 3): i])
-            assert "ENSURE_REQUIREMENTS" not in above, plan
-        for cc in res.cached:
-            cc.unpersist()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    res = epoch_plan.run_epoch(
+        c.frontier, c.pages_latest, c.robots, c.seen_keys,
+        epoch=1, seq_base=c.seq_base,
+    )
+    res.crawl_log.count()
+    plan = res.crawl_log._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    # only the corpus-index scan matters (it carries the html payload);
+    # the gated cache feeding the single-partition trace window has a
+    # legitimate ENSURE_REQUIREMENTS exchange above it
+    scan_idx = [
+        i for i, l in enumerate(lines)
+        if "InMemoryTableScan" in l and "html" in l
+    ]
+    assert scan_idx, plan
+    for i in scan_idx:
+        # allow the cached REPARTITION exchange INSIDE the relation,
+        # forbid an ENSURE_REQUIREMENTS exchange feeding the scan
+        above = "\n".join(lines[max(0, i - 3): i])
+        assert "ENSURE_REQUIREMENTS" not in above, plan
+
+    # the fetch join's index side (url_fp, __idx_url, html, corpus_lang)
+    # is in no BroadcastExchange's subtree, in the final or initial plan
+    idx_proj = re.compile(
+        r"Project \[url_fp#\d+L, url#\d+ AS __idx_url#\d+, html#\d+, "
+        r"lang#\d+ AS corpus_lang#\d+\]"
+    )
+    assert any(idx_proj.search(l) for l in lines), plan
+
+    def node_col(line: str) -> int:
+        return re.match(r"[ :]*(?:[+:]- )?", line).end()
+
+    for i, l in enumerate(lines):
+        if "BroadcastExchange" not in l:
+            continue
+        col = node_col(l)
+        for sub in lines[i + 1:]:
+            if node_col(sub) <= col:
+                break
+            assert not idx_proj.search(sub), plan
+    for cc in res.cached:
+        cc.unpersist()
 
 
 def test_dedup_spans_plan_shape(spark):

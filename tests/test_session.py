@@ -1,11 +1,12 @@
-"""Session warm-up contract.
+"""Session contract: the warm-up and the Tungsten page size.
 
 The warm-up moves one-time engine init (first shuffle and broadcast, the
 Arrow/Python worker path, the persist and parquet paths) to session
 construction so it stops landing on whichever crawl epoch or curate run
 comes first. It must never truncate in silence: a step that raises fails
 session construction, and the completion marker is set only after every
-step ran.
+step ran. The page size is pinned to 4 MiB, the floor of every
+broadcast hash relation.
 """
 
 from __future__ import annotations
@@ -34,3 +35,11 @@ def test_warm_up_step_failure_raises():
     )
     with pytest.raises(RuntimeError, match="warm step failed"):
         _warm_up(stub)
+
+
+def test_tungsten_page_is_4_mib(spark):
+    # a broadcast hash relation takes at least one Tungsten page: the
+    # default (heap / cores / 16, capped at 64 MiB) pinned 64 MiB for the
+    # 7-row robots table
+    env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
+    assert env.memoryManager().pageSizeBytes() == 4 << 20
